@@ -780,8 +780,8 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpointed frame: O(corpus vectors) rows INCLUDING the embedding
     # array (the pair cosine needs it — no narrower projection exists).
     # Round-15 honest A/B: keep 0.96 s vs revert 1.20 s — KEPT; at
-    # cluster scale flip SPARK_GRAFT_RELIABLE_CHECKPOINT=1 so the
-    # O(corpus) blocks go to fault-tolerant storage.
+    # cluster scale pass materialize a checkpoint_dir so the O(corpus)
+    # blocks go to fault-tolerant storage.
     bucketed = (
         spread(e.select("vec_id", "embedding"))
         .select("vec_id", "embedding", bucket)
@@ -1308,8 +1308,8 @@ def semantic_dedup(
     # the final label join) — materialize it once per invocation
     # (guide §3.3). Checkpointed frame: O(corpus vectors) rows including
     # the embedding (the pair cosine needs it). Round-15 honest A/B:
-    # keep 1.20 s vs revert 1.70 s — KEPT; reliable-checkpoint env knob
-    # applies at cluster scale.
+    # keep 1.20 s vs revert 1.70 s — KEPT; at cluster scale pass a
+    # checkpoint_dir (as in q_dedup_embedding_lsh).
     members = ranked.transform(materialize)
     pairs = triangle_self_join(
         members,
@@ -1432,8 +1432,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         # invocation (guide §3.3). Checkpointed frame: O(corpus docs)
         # rows including the shingle ARRAY (the pair intersection needs
         # it). Round-15 honest A/B: keep 0.83 s vs revert 2.14 s — the
-        # round's largest keep margin (2.6x); reliable-checkpoint env
-        # knob applies at cluster scale.
+        # round's largest keep margin (2.6x); at cluster scale pass a
+        # checkpoint_dir (as in q_dedup_embedding_lsh).
     ).transform(materialize)
     pairs = triangle_self_join(
         keyed, block_cols=["lang", "mh1"], id_col="doc_id", n_sub=4

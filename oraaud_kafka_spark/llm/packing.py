@@ -615,3 +615,159 @@ def q_sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "rk")
     )
+
+
+# ---------------------------------------------------------------------------
+# Neyman-optimal stratified sample allocation — the sampling-design
+# question the stratified/weighted samplers above execute but never
+# answer: given a budget of n rows across the event-type strata, the variance-minimizing allocation is
+# n_h ∝ N_h·σ_h (Neyman 1934), not proportional n_h ∝ N_h. One
+# partial-agg'd pass collapses any event volume to exact per-stratum
+# (count, Σcents, Σcents²) — integer cents in DECIMAL(38,0) so no
+# scale overflows — then the σ_h, shares, and BOTH allocations
+# (Neyman and proportional, for the delta the report exists to show)
+# are fixed-shape double algebra over the bounded strata table.
+# Integer allocations use the largest-remainder method: floors, then
+# +1 to the top (frac DESC, stratum ASC) remainders — total-ordered,
+# so both engines land the identical integer split and the budget is
+# hit exactly (structural test).
+# ---------------------------------------------------------------------------
+
+_NEYMAN_BUDGET = 1000
+
+
+def _neyman_oracle() -> str:
+    return f"""
+WITH m AS (
+  SELECT event_type,
+         count(*) AS big_n,
+         sum(CAST(CAST(round(value * 100) AS BIGINT) AS DECIMAL(38,0)))
+           AS s1,
+         sum(CAST(CAST(round(value * 100) AS BIGINT)
+                  * CAST(round(value * 100) AS BIGINT) AS DECIMAL(38,0)))
+           AS s2
+  FROM events WHERE value IS NOT NULL
+  GROUP BY 1
+),
+sd AS (
+  SELECT event_type, big_n,
+         sqrt(CAST(s2 AS DOUBLE) / big_n
+              - (CAST(s1 AS DOUBLE) / big_n) * (CAST(s1 AS DOUBLE) / big_n))
+           AS sd_cents
+  FROM m
+),
+w AS (
+  SELECT event_type, big_n, sd_cents,
+         big_n * sd_cents AS wn,
+         CAST(big_n AS DOUBLE) AS wp
+  FROM sd
+),
+tot AS (SELECT sum(wn) AS twn, sum(wp) AS twp FROM w),
+raw AS (
+  SELECT event_type, big_n, sd_cents,
+         wn / twn AS neyman_share,
+         {_NEYMAN_BUDGET} * wn / twn AS raw_n,
+         {_NEYMAN_BUDGET} * wp / twp AS raw_p
+  FROM w CROSS JOIN tot
+),
+alloc AS (
+  SELECT event_type, big_n, sd_cents, neyman_share,
+         CAST(floor(raw_n) AS BIGINT) AS base_n,
+         row_number() OVER (ORDER BY raw_n - floor(raw_n) DESC, event_type)
+           AS rn_n,
+         CAST(floor(raw_p) AS BIGINT) AS base_p,
+         row_number() OVER (ORDER BY raw_p - floor(raw_p) DESC, event_type)
+           AS rn_p,
+         {_NEYMAN_BUDGET} - sum(CAST(floor(raw_n) AS BIGINT)) OVER ()
+           AS rem_n,
+         {_NEYMAN_BUDGET} - sum(CAST(floor(raw_p) AS BIGINT)) OVER ()
+           AS rem_p
+  FROM raw
+)
+SELECT event_type, CAST(big_n AS BIGINT) AS big_n,
+       round(sd_cents, 6) AS sd_cents,
+       round(neyman_share, 6) AS neyman_share,
+       CAST(base_n + CASE WHEN rn_n <= rem_n THEN 1 ELSE 0 END AS BIGINT)
+         AS n_neyman,
+       CAST(base_p + CASE WHEN rn_p <= rem_p THEN 1 ELSE 0 END AS BIGINT)
+         AS n_proportional
+FROM alloc
+ORDER BY event_type
+"""
+
+
+NEYMAN_ORACLE = _neyman_oracle()
+
+
+@query("q_sample_neyman_allocation", oracle=NEYMAN_ORACLE)
+def q_sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    cents = F.round(F.col("value") * 100).cast("long")
+    m = e.groupBy("event_type").agg(
+        F.count("*").alias("big_n"),
+        F.sum(cents.cast("decimal(38,0)")).alias("s1"),
+        F.sum((cents * cents).cast("decimal(38,0)")).alias("s2"),
+    )
+    nd = F.col("big_n")
+    s1d = F.col("s1").cast("double")
+    s2d = F.col("s2").cast("double")
+    sd = m.select(
+        "event_type",
+        "big_n",
+        F.sqrt(s2d / nd - (s1d / nd) * (s1d / nd)).alias("sd_cents"),
+    )
+    w = sd.select(
+        "event_type",
+        "big_n",
+        "sd_cents",
+        (F.col("big_n") * F.col("sd_cents")).alias("wn"),
+        F.col("big_n").cast("double").alias("wp"),
+    )
+    tot = w.agg(F.sum("wn").alias("twn"), F.sum("wp").alias("twp"))
+    raw = w.crossJoin(F.broadcast(tot)).select(
+        "event_type",
+        "big_n",
+        "sd_cents",
+        (F.col("wn") / F.col("twn")).alias("neyman_share"),
+        (_NEYMAN_BUDGET * F.col("wn") / F.col("twn")).alias("raw_n"),
+        (_NEYMAN_BUDGET * F.col("wp") / F.col("twp")).alias("raw_p"),
+    )
+    whole = Window.partitionBy()
+    alloc = raw.select(
+        "event_type",
+        "big_n",
+        "sd_cents",
+        "neyman_share",
+        F.floor("raw_n").cast("long").alias("base_n"),
+        F.row_number()
+        .over(Window.orderBy(F.desc(F.col("raw_n") - F.floor("raw_n")), "event_type"))
+        .alias("rn_n"),
+        F.floor("raw_p").cast("long").alias("base_p"),
+        F.row_number()
+        .over(Window.orderBy(F.desc(F.col("raw_p") - F.floor("raw_p")), "event_type"))
+        .alias("rn_p"),
+        (_NEYMAN_BUDGET - F.sum(F.floor("raw_n").cast("long")).over(whole)).alias(
+            "rem_n"
+        ),
+        (_NEYMAN_BUDGET - F.sum(F.floor("raw_p").cast("long")).over(whole)).alias(
+            "rem_p"
+        ),
+    )
+    return alloc.select(
+        "event_type",
+        F.col("big_n").cast("long").alias("big_n"),
+        F.round("sd_cents", 6).alias("sd_cents"),
+        F.round("neyman_share", 6).alias("neyman_share"),
+        (
+            F.col("base_n")
+            + F.when(F.col("rn_n") <= F.col("rem_n"), 1).otherwise(0)
+        )
+        .cast("long")
+        .alias("n_neyman"),
+        (
+            F.col("base_p")
+            + F.when(F.col("rn_p") <= F.col("rem_p"), 1).otherwise(0)
+        )
+        .cast("long")
+        .alias("n_proportional"),
+    ).orderBy("event_type")

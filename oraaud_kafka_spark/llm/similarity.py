@@ -1144,7 +1144,7 @@ def q_eval_mrr_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recall on genuinely close pairs; the analytic curve per bit is
 # P(sign agree) = 1 - theta/pi (Charikar, STOC'02). Anchors are the
 # lowest B*r vec_ids (asserted ALL directional at both SFs by
-# test_pending_r13, so a zero-norm id can never silently shrink the
+# test_round13_invariants, so a zero-norm id can never silently shrink the
 # bits string and flatten the curve) — data-derived, so both engines
 # reconstruct the identical hyperplanes with no RNG. The exhaustive
 # pair join is the CALIBRATION harness, deliberately slice-bounded and

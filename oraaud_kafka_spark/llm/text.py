@@ -1990,3 +1990,153 @@ def q_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
+
+
+# ---------------------------------------------------------------------------
+# BM25 top-k retrieval — the ranking rung above the TF-IDF kit:
+# Robertson/Sparck-Jones BM25 with the Lucene idf form
+# ln(1 + (N - df + 0.5)/(df + 0.5)), k1 = 1.2, b = 0.75 — what a RAG
+# lexical-retrieval leg actually runs. Query terms are DATA-DERIVED
+# (the 5 tokens ranked 10th-14th by document frequency under a
+# (df DESC, tok ASC) total order — mid-frequency, so scores
+# discriminate), making both engines reconstruct identical queries
+# with no literals to drift. Scale shape: ONE tokenize pass feeds both
+# the (doc, term) tf table (semi-joined to the 5 broadcast query
+# terms BEFORE any shuffle — the posting-list prune) and the per-doc
+# length table; df and avgdl are scalar aggregates; the final score is
+# a fixed-shape double expression rounded to 6 dp (the
+# q_sim_pandas_udf_cosine discipline, swallowing cross-libm ln noise)
+# and top-3 docs per query rank by (score DESC, doc_id) — a
+# WindowGroupLimit over the pruned postings, never the corpus.
+# ---------------------------------------------------------------------------
+
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+_BM25_Q_LO = 10  # query terms = df ranks 10..14
+_BM25_Q_N = 5
+_BM25_TOP = 3
+
+BM25_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, t.tok
+  FROM documents,
+       LATERAL (SELECT unnest(string_split(text, ' ')) AS tok) t
+  WHERE t.tok != ''
+),
+dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
+stats AS (
+  SELECT (SELECT count(*) FROM documents) AS n_docs,
+         (SELECT CAST(sum(dl) AS DOUBLE) / count(*) FROM dl) AS avgdl
+),
+df AS (SELECT tok, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
+qterms AS (
+  SELECT tok, df, rnk FROM (
+    SELECT tok, df, row_number() OVER (ORDER BY df DESC, tok) AS rnk
+    FROM df
+  ) WHERE rnk >= {_BM25_Q_LO} AND rnk < {_BM25_Q_LO + _BM25_Q_N}
+),
+tf AS (
+  SELECT t.doc_id, t.tok, count(*) AS tf
+  FROM toks t JOIN qterms q ON q.tok = t.tok
+  GROUP BY 1, 2
+),
+scored AS (
+  SELECT q.tok AS query_term, f.doc_id,
+         round(
+           ln(1 + (s.n_docs - q.df + 0.5) / (q.df + 0.5))
+           * (f.tf * ({_BM25_K1} + 1))
+           / (f.tf + {_BM25_K1} * (1 - {_BM25_B}
+              + {_BM25_B} * d.dl / s.avgdl)),
+           6
+         ) AS score
+  FROM tf f
+  JOIN qterms q ON q.tok = f.tok
+  JOIN dl d ON d.doc_id = f.doc_id
+  CROSS JOIN stats s
+)
+SELECT query_term, CAST(rank AS BIGINT) AS rank,
+       CAST(doc_id AS BIGINT) AS doc_id, score
+FROM (
+  SELECT query_term, doc_id, score,
+         row_number() OVER (PARTITION BY query_term
+                            ORDER BY score DESC, doc_id) AS rank
+  FROM scored
+) WHERE rank <= {_BM25_TOP}
+ORDER BY query_term, rank
+"""
+
+
+@query("q_text_bm25_topk", oracle=BM25_ORACLE)
+def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    toks = spread(
+        d.select("doc_id", F.split("text", " ").alias("ts"))
+    ).select(
+        "doc_id", F.explode(F.filter("ts", lambda x: x != "")).alias("tok")
+    )
+    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
+    n_docs = d.agg(F.count("*").alias("n_docs"))
+    avgdl = dl.agg(
+        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl")
+    )
+    df_t = toks.groupBy("tok").agg(F.count_distinct("doc_id").alias("df"))
+    qterms = (
+        df_t.select(
+            "tok",
+            "df",
+            F.row_number().over(Window.orderBy(F.desc("df"), "tok")).alias(
+                "rnk"
+            ),
+        )
+        .filter(
+            (F.col("rnk") >= _BM25_Q_LO)
+            & (F.col("rnk") < _BM25_Q_LO + _BM25_Q_N)
+        )
+        .select("tok", "df")
+    )
+    tf = (
+        # no forced broadcast: qterms is 5 rows but derives from a
+        # grouped-agg the hint audit cannot prove bounded — AQE
+        # broadcasts it from the measured size at runtime
+        toks.join(qterms.select("tok"), "tok")
+        .groupBy("doc_id", "tok")
+        .agg(F.count("*").alias("tf"))
+    )
+    idf = F.log(
+        1
+        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    norm = F.col("tf") + _BM25_K1 * (
+        1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl")
+    )
+    scored = (
+        tf.join(qterms, "tok")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(F.broadcast(avgdl))
+        .select(
+            F.col("tok").alias("query_term"),
+            "doc_id",
+            F.round(
+                idf * (F.col("tf") * (_BM25_K1 + 1)) / norm, 6
+            ).alias("score"),
+        )
+    )
+    return (
+        scored.select(
+            "query_term",
+            "doc_id",
+            "score",
+            F.row_number()
+            .over(
+                Window.partitionBy("query_term").orderBy(
+                    F.desc("score"), "doc_id"
+                )
+            )
+            .cast("long")
+            .alias("rank"),
+        )
+        .filter(F.col("rank") <= _BM25_TOP)
+        .select("query_term", "rank", F.col("doc_id").cast("long").alias("doc_id"), "score")
+        .orderBy("query_term", "rank")
+    )

@@ -12,10 +12,9 @@ growth, not compute).
 
 Durability: ``localCheckpoint`` (the default) stores blocks on
 executors with lineage discarded — fast, but an executor loss
-mid-iteration is unrecoverable. For long cluster runs set a reliable
-checkpoint dir (``spark.sparkContext.setCheckpointDir`` or the
-``checkpoint_dir`` argument) and blocks go to fault-tolerant storage
-with full recompute-on-loss.
+mid-iteration is unrecoverable. For long cluster runs pass
+``checkpoint_dir`` and blocks go to fault-tolerant storage there, with
+full recompute-on-loss.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ def connected_components(
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iter: int = 50,
-    reliable: bool = False,
     checkpoint_dir: str | None = None,
     edges_distinct: bool = False,
 ) -> DataFrame:
@@ -40,9 +38,9 @@ def connected_components(
     undirected graph given by ``edges``. Returns (node_col, component).
     Isolated nodes are their own component.
 
-    ``reliable=True`` (implied by ``checkpoint_dir``) uses
-    ``DataFrame.checkpoint()`` against the session's checkpoint dir so an
-    executor loss mid-iteration recomputes instead of aborting.
+    ``checkpoint_dir`` switches every round to ``DataFrame.checkpoint()``
+    into that dir, so an executor loss mid-iteration recomputes instead
+    of aborting.
 
     ``edges_distinct=True`` declares the input pair set already
     duplicate-free with src < dst (the minhash candidate-pair contract),
@@ -52,9 +50,9 @@ def connected_components(
     only cost join multiplicity, never wrong labels (min over
     duplicates is the same min), so the default stays the safe dedup
     for arbitrary inputs."""
-    if checkpoint_dir is not None:
+    reliable = checkpoint_dir is not None
+    if reliable:
         nodes.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        reliable = True
 
     def ckpt(df: DataFrame) -> DataFrame:
         from ..tables import note_data_computed
@@ -114,82 +112,9 @@ def connected_components(
         if changed == 0:
             return labels.select(F.col("node").alias(node_col), "component")
     # exhaustion must be LOUD: returning the last labels would silently
-    # split any component whose convergence outruns the budget — the
-    # exact failure the round-13 advisor flagged against the cluster
-    # maintainer's old fixed-round loop, and this operator feeds
-    # q_dedup_components / q_dedup_cluster_cc, the batch side of that
-    # maintainer's byte-equality contract
+    # split any component whose convergence outruns the budget
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds "
         f"({changed} labels still changing) — refusing to return split "
         "components"
-    )
-
-
-def min_label_cc_pointer_jump(
-    qdir: DataFrame, *, max_rounds: int = 64
-) -> DataFrame:
-    """Hash-min + pointer-jump connected components over a BIDIRECTED
-    edge table ``qdir`` (columns qu, qv; every undirected edge present
-    in both directions), run to LABEL FIXPOINT. Returns (node, lbl)
-    where lbl is the min node id of the component.
-
-    The per-round step is hash-min (every node takes the min of its own
-    and its in-neighbors' labels) followed by one pointer jump
-    (lbl := lbl's current label), which roughly halves the remaining
-    label-tree height — so rounds needed ~ log2(diameter), not
-    diameter. Convergence is CHECKED per round (changed-label count);
-    a fixed round count would silently split any component whose
-    diameter outruns it (round-13 advisor finding against the cluster
-    maintainer's old fixed-6 loop — see
-    tests/test_cluster_maintainer.py for the 40-hop path that needs 7+
-    rounds). ``max_rounds`` exhaustion RAISES rather than returning
-    split labels; at 64 it is only reachable by a bug.
-
-    Used by streaming.analytics.cluster_store_maintainer on the
-    batch-bounded quotient graph; generic over any bidirected edge
-    frame. Lineage is truncated per round via eager localCheckpoint
-    (the iterative-plan-growth discipline of connected_components
-    above).
-    """
-    from ..tables import note_data_computed
-
-    note_data_computed()  # iterative build computes data: no memo
-    qlabels = (
-        qdir.select(F.col("qu").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    n_changed = -1
-    for _ in range(max_rounds):
-        contrib = qdir.join(qlabels, qdir["qu"] == qlabels["node"]).select(
-            F.col("qv").alias("node"), "lbl"
-        )
-        merged = (
-            qlabels.unionByName(contrib)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-        hop = merged.select(
-            F.col("node").alias("p_node"), F.col("lbl").alias("p_lbl")
-        )
-        nxt = (
-            merged.join(hop, merged["lbl"] == hop["p_node"])
-            .select("node", F.col("p_lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        n_changed = (
-            nxt.alias("n")
-            .join(qlabels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        qlabels = nxt
-        if n_changed == 0:
-            return qlabels
-    raise RuntimeError(
-        f"quotient CC did not reach a label fixpoint in {max_rounds} "
-        f"rounds ({n_changed} labels still changing) — refusing to "
-        "return split components"
     )

@@ -308,9 +308,8 @@ def q_events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # orders (the support floor keeps the edge set signal-bearing and
 # BOUNDED — the fixture carries 2.3-3.6k edges at every SF while the
 # raw pair count grows 100x). THE one definition (SQL CTE + DataFrame
-# twins) shared by the triangle count below and the round-15/16 queue's
-# link prediction and weighted PageRank, so the graph can never
-# silently diverge between them.
+# twins) shared by the triangle count and the link prediction below, so
+# the graph can never silently diverge between them.
 # ---------------------------------------------------------------------------
 
 _TRI_SUPPORT = 2  # co-purchase edges need >= 2 common orders
@@ -551,5 +550,120 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (3 * F.col("n_triangles")).cast("double") / F.col("n_wedges")
             ).alias("transitivity"),
         )
+        .orderBy("rank")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Jaccard link prediction on the co-purchase graph — the recommender
+# question the triangle structure sets up: for part pairs at
+# DISTANCE 2 (a common co-purchase neighbor but no edge),
+# score the missing edge by neighbor-set Jaccard |N(x)∩N(z)| /
+# |N(x)∪N(z)| (Liben-Nowell & Kleinberg 2003) and emit the top-10
+# predicted links. Scale shape: candidate pairs come from the wedge
+# join on the SAME bounded support-floored edge set as the triangle
+# count (shared _COPURCHASE_CTE_SQL / _copurchase_edges definition —
+# never an all-pairs scan of the part domain), common-neighbor counts
+# are the wedge groupBy, existing edges are removed with one anti
+# join on the canonical pair, and the union size is the inclusion-
+# exclusion dx + dz - common (degrees joined, no second neighbor
+# expansion). Counts exact integers; the Jaccard is one IEEE division
+# computed identically on both engines; ranking is total-ordered by
+# (score DESC, x, z).
+# ---------------------------------------------------------------------------
+
+_LP_TOP = 10
+
+LINK_PRED_ORACLE = f"""
+WITH {_COPURCHASE_CTE_SQL},
+nbr AS (
+  SELECT u AS node, v AS nb FROM e
+  UNION ALL SELECT v AS node, u AS nb FROM e
+),
+cand AS (
+  SELECT least(a.node, b.node) AS x, greatest(a.node, b.node) AS z,
+         count(*) AS common
+  FROM nbr a JOIN nbr b
+    ON a.nb = b.nb AND a.node < b.node
+  GROUP BY 1, 2
+),
+new_pairs AS (
+  SELECT c.x, c.z, c.common
+  FROM cand c LEFT JOIN e ON e.u = c.x AND e.v = c.z
+  WHERE e.u IS NULL
+),
+scored AS (
+  SELECT p.x, p.z,
+         CAST(p.common AS BIGINT) AS common,
+         CAST(dx.d + dz.d - p.common AS BIGINT) AS unions,
+         CAST(p.common AS DOUBLE) / (dx.d + dz.d - p.common) AS jaccard
+  FROM new_pairs p
+  JOIN deg dx ON dx.node = p.x
+  JOIN deg dz ON dz.node = p.z
+)
+SELECT CAST(rank AS BIGINT) AS rank, CAST(x AS BIGINT) AS part_a,
+       CAST(z AS BIGINT) AS part_b, common, unions, jaccard
+FROM (
+  SELECT x, z, common, unions, jaccard,
+         row_number() OVER (ORDER BY jaccard DESC, x, z) AS rank
+  FROM scored
+) WHERE rank <= {_LP_TOP}
+ORDER BY rank
+"""
+
+
+@query("q_graph_link_prediction", oracle=LINK_PRED_ORACLE)
+def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _copurchase_edges(spark, sf_dir)
+    deg = _copurchase_degrees(e)
+    nbr = e.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionAll(
+        e.select(F.col("v").alias("node"), F.col("u").alias("nb"))
+    )
+    na = nbr.select(F.col("node").alias("xa"), "nb")
+    nb_ = nbr.select(F.col("node").alias("xb"), "nb")
+    cand = (
+        na.join(nb_, "nb")
+        .filter(F.col("xa") < F.col("xb"))
+        .groupBy(
+            F.least("xa", "xb").alias("x"), F.greatest("xa", "xb").alias("z")
+        )
+        .agg(F.count("*").alias("common"))
+    )
+    new_pairs = cand.join(
+        e.select(F.col("u").alias("x"), F.col("v").alias("z")),
+        ["x", "z"],
+        "left_anti",
+    )
+    dx = deg.select(F.col("node").alias("x"), F.col("d").alias("dx"))
+    dz = deg.select(F.col("node").alias("z"), F.col("d").alias("dz"))
+    scored = (
+        new_pairs.join(dx, "x")
+        .join(dz, "z")
+        .select(
+            "x",
+            "z",
+            F.col("common").cast("long").alias("common"),
+            (F.col("dx") + F.col("dz") - F.col("common"))
+            .cast("long")
+            .alias("unions"),
+            (
+                F.col("common").cast("double")
+                / (F.col("dx") + F.col("dz") - F.col("common"))
+            ).alias("jaccard"),
+        )
+    )
+    return (
+        scored.select(
+            F.row_number()
+            .over(Window.orderBy(F.desc("jaccard"), "x", "z"))
+            .cast("long")
+            .alias("rank"),
+            F.col("x").cast("long").alias("part_a"),
+            F.col("z").cast("long").alias("part_b"),
+            "common",
+            "unions",
+            "jaccard",
+        )
+        .filter(F.col("rank") <= _LP_TOP)
         .orderBy("rank")
     )

@@ -259,9 +259,8 @@ def q_sql_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline a SQL-first user MIGRATES INTO on Spark — the single-text
     chain split at the multiply-referenced CTE boundary, with the
     intermediate materialized once per invocation. Spark inlines CTEs,
-    so the one-text form (kept as the oracle, and queued as the thin
-    single-text twin `q_sql_cte_chain_inline` in PENDING_R16) executes
-    the whole lineitem-to-nation pipeline once per reference; the split
+    so the one-text form (kept as the oracle) executes the whole
+    lineitem-to-nation pipeline once per reference; the split
     runs it once total (round-15 honest A/B, full recompute per rep:
     1.16 s split+checkpoint vs 1.42 s lazy split ~= one-text). The
     oracle stays the single text, so the green hash proves the split

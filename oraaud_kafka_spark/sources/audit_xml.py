@@ -14,9 +14,12 @@ Reference semantics -> Spark mapping:
 - pid from ``*_<pid>_<ts>.xml`` (OraTrcNameHolder.java:34-35)
   -> regexp_extract on the file name.
 - completeness gate endsWith("</Audit>") (KafkaJob.java:59) ->
-  is_complete filter; incomplete files are NOT consumed this batch and,
-  not being deleted, are retried by re-listing — the analog of the
-  requeue at KafkaJob.java:81-88.
+  is_complete filter (trailing spaces, tabs and line breaks ignored);
+  incomplete files are withheld from the sink. They are NOT retried:
+  the file source logs every listed file as seen, so a later
+  re-listing skips them, and ``cleanSource`` deletes or archives them
+  after the batch commits like any other listed file. The reference
+  requeues them instead (KafkaJob.java:81-88); that gap is open.
 - locked-writer gate (R-6, OpenFilesIntf strategies): Spark's contract is
   immutable-once-visible files; the trigger interval plus the
   completeness predicate provide the equivalent "never ship a truncated
@@ -45,8 +48,9 @@ def driver_hostname() -> str:
 def _decorate(df: DataFrame, hostname: str | None) -> DataFrame:
     host = hostname or driver_hostname()
     src_file = F.input_file_name()
-    # is_complete is computed on the RAW value (rtrim + endsWith — same
-    # semantics as rlike '</Audit>\s*$', KafkaJob.java:59) BEFORE the
+    # is_complete is computed on the RAW value (rtrim of spaces, tabs
+    # and line breaks + endsWith — same semantics as
+    # rlike '</Audit>\s*$', KafkaJob.java:59) BEFORE the
     # newline-strip, so the downstream completeness filter runs a cheap
     # literal suffix match on the scan output and the ~1 MB translate
     # copy is evaluated once, only for rows that pass the gate. With the
@@ -59,7 +63,9 @@ def _decorate(df: DataFrame, hostname: str | None) -> DataFrame:
         .withColumn("key", F.concat_ws(":", F.lit(host), src_file))
         .withColumn(
             "is_complete",
-            F.endswith(F.rtrim(F.col("value")), F.lit("</Audit>")),
+            F.endswith(
+                F.rtrim(F.col("value"), F.lit(" \t\r\n")), F.lit("</Audit>")
+            ),
         )
         .withColumn("value", F.translate("value", "\n", ""))
     )
@@ -108,7 +114,9 @@ def read_audit_batch(
 
 
 def complete_only(df: DataFrame) -> DataFrame:
-    """R-10: ship only well-formed files; the rest retry via re-listing."""
+    """R-10: ship only well-formed files. The rest are withheld, not
+    retried: the file source never lists them again, and ``cleanSource``
+    consumes them with their batch."""
     return df.filter(F.col("is_complete"))
 
 

@@ -1,7 +1,6 @@
 """Streaming analytics kit (SURVEY.md §2.2 streaming ops): watermarks,
 event-time windows, streaming dedup, stream-static and stream-stream
-joins, and a custom stateful operator reproducing the reference's
-retry-until-complete contract (R-6/R-10) in-stream.
+joins, and custom stateful operators.
 
 All helpers take/return streaming DataFrames so they compose with the
 ingest pipeline (streaming.ingest) and any sink. Each is a thin,
@@ -207,7 +206,7 @@ def conversion_rate_monitor(
 ) -> DataFrame:
     """Live per-window conversion RATE: the LEFT-OUTER complement of
     interval_latency_monitor — every click counted, converted or not
-    (the streaming twin of the pending batch query
+    (the streaming twin of the batch query
     q_time_conversion_rate; parity-pinned byte-equal in
     tests/test_streaming.py).
 
@@ -451,7 +450,7 @@ def dynamic_session_monitor(
     events: DataFrame, *, delay: str = "1 hour"
 ) -> DataFrame:
     """Live dynamic-gap sessionization: the streaming twin of the
-    pending batch query q_time_session_dynamic_gap (parity-pinned
+    batch query q_time_session_dynamic_gap (parity-pinned
     byte-equal in tests/test_streaming.py). Each event keeps its user's
     session alive for a PER-EVENT gap (clicks 30 min, everything else
     10 min — Spark-4 dynamic session windows); the gap expression and
@@ -471,75 +470,10 @@ def dynamic_session_monitor(
 
 
 # ---------------------------------------------------------------------------
-# R-6/R-10 in-stream: retry-until-complete as a custom stateful operator.
-#
-# The reference re-enqueues a file whose payload doesn't yet end with
-# </Audit> and ships it on a later poll once complete
-# (KafkaJob.java:59,81-88). Modeled in-stream: group by src_file, keep an
-# attempts counter in state; emit exactly when a complete payload
-# arrives, then drop the state. Incomplete-only groups hold state (the
-# retry queue) until a later micro-batch completes them.
-# ---------------------------------------------------------------------------
-
-RETRY_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("src_file", StringType()),
-        StructField("value", StringType()),
-        StructField("n_attempts", IntegerType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-RETRY_STATE_SCHEMA = StructType([StructField("attempts", IntegerType())])
-
-
-def _retry_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-    (src_file,) = key
-    attempts = state.get[0] if state.exists else 0
-    complete_value = None
-    for pdf in pdfs:
-        for _, row in pdf.iterrows():
-            attempts += 1
-            if row["is_complete"]:
-                complete_value = row["value"]
-    if complete_value is not None:
-        if state.exists:
-            state.remove()
-        yield pd.DataFrame(
-            {
-                "src_file": [src_file],
-                "value": [complete_value],
-                "n_attempts": [attempts],
-                "n_bytes": [len(complete_value)],
-            }
-        )
-    else:
-        state.update((attempts,))
-
-
-def retry_until_complete(df: DataFrame) -> DataFrame:
-    """Stateful completeness gate over (src_file, value, is_complete)
-    rows: emits each file once, on the micro-batch where it first
-    arrives complete, with the attempt count the reference would have
-    logged on its retry path."""
-    return (
-        df.select("src_file", "value", "is_complete")
-        .groupBy("src_file")
-        .applyInPandasWithState(
-            _retry_fn,
-            RETRY_OUTPUT_SCHEMA,
-            RETRY_STATE_SCHEMA,
-            "append",
-            "NoTimeout",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # transformWithStateInPandas (Spark 4 arbitrary-state API): running
-# per-key statistics with an explicit ValueState cell. Complements the
-# applyInPandasWithState retry gate above — this is the successor API
-# (typed state handles, timers, TTL) the engine standardizes on for new
-# custom stateful operators. State per key is O(1) (count / sum / max),
+# per-key statistics with an explicit ValueState cell. This is the
+# successor to applyInPandasWithState (typed state handles, timers,
+# TTL) the engine standardizes on for new custom stateful operators. State per key is O(1) (count / sum / max),
 # emitted in Update mode every batch the key appears in.
 # ---------------------------------------------------------------------------
 
@@ -580,9 +514,8 @@ def running_type_stats(df: DataFrame) -> DataFrame:
     if not transform_with_state_available():
         raise NotImplementedError(
             "transformWithStateInPandas needs google.protobuf in the worker "
-            "environment; not installable in this container. Use "
-            "retry_until_complete (applyInPandasWithState) locally, or run "
-            "on a cluster with protobuf to use this operator unchanged."
+            "environment; not installable in this container. Run on a "
+            "cluster with protobuf to use this operator unchanged."
         )
     from pyspark.sql.streaming import StatefulProcessor
 
@@ -1999,8 +1932,8 @@ def committed_decisions(spark, base_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Count-Min sketch maintenance, live: the streaming leg of the pending
-# batch q_agg_cms_heavy_hitters (queries/pending.py, round-14 queue) —
+# Count-Min sketch maintenance, live: the streaming leg of the batch
+# q_agg_cms_heavy_hitters (queries/aggregates.py) —
 # CMS is mergeable by CELL-WISE ADDITION, so each micro-batch
 # partial-aggregates only its own rows into a d x w grid and adds it
 # into the standing sketch: the maintained table always equals the
@@ -2099,256 +2032,3 @@ def current_cms_dir(base_dir: str) -> str:
     marker = os.path.join(base_dir, "_committed")
     with open(marker) as fh:
         return os.path.join(base_dir, f"cms_batch={int(fh.read().strip())}")
-
-
-# ---------------------------------------------------------------------------
-# Incremental duplicate-CLUSTER maintenance, live: the streaming leg of
-# the pending batch q_dedup_cluster_cc (queries/pending.py, round-16
-# queue), shipped ahead of its batch twin exactly like the CMS
-# maintainer was. Each micro-batch of new documents extends the
-# persisted MinHash signature store (the signature_store_maintainer
-# layout) AND folds the batch's verified near-dup edges into a standing
-# connected-component label table — components merge ONLY through new
-# edges, so the update is the QUOTIENT trick: map each new edge to the
-# (standing label, standing label) pair of its endpoints, run hash-min
-# + pointer-jump CC on that contracted graph (bounded by the batch's
-# edge endpoints, never the corpus), and rewrite standing labels
-# through the resulting old-label -> new-label map. Labels stay the
-# min doc_id of their component (standing labels are component minima
-# and quotient CC takes minima of minima), so the maintained cluster
-# table is byte-equal to the from-scratch batch CC over every doc seen
-# — for ANY batch split, since CC is order-free. Commit discipline:
-# append-only signature shards + versioned full label tables + one
-# atomic JSON marker carrying per-batch content fingerprints, so
-# at-least-once replays no-op and a foreign checkpoint's reused batch
-# id raises instead of silently dropping documents.
-# ---------------------------------------------------------------------------
-
-_CLUSTER_CC_MAX_ROUNDS = 64
-
-
-def cluster_store_maintainer(base_dir: str):
-    """foreachBatch callback maintaining incremental dedup clusters
-    under ``base_dir``:
-
-        sigs_batch=<n>/  signatures of batch n's docs (append-only)
-        labels_v=<n>/    (node, lbl) label table committed at batch n
-        _committed       marker: batch ids, label version, per-batch
-                         content fingerprints, deferred deletes
-
-    Read the committed cluster table with ``committed_clusters`` — its
-    rows are pinned byte-equal to q_dedup_cluster_cc over all ingested
-    docs (tests/test_cluster_maintainer.py, sf0.001 AND sf0.01)."""
-    import json as _json
-    import os
-
-    from ..llm.dedup import (
-        INCR_EQ_MIN,
-        N_HASHES,
-        _sig_band_rows,
-        mh_signature_table,
-    )
-    from ..sources.tabular import write_parquet
-
-    def _state(marker: str) -> dict:
-        if not os.path.exists(marker):
-            return {"last_batch": -1, "shards": [], "labels_version": -1,
-                    "fingerprints": {}, "garbage": []}
-        with open(marker) as fh:
-            return _json.load(fh)
-
-    def _fingerprint(df: DataFrame) -> list:
-        row = df.select(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.hash("doc_id").cast("long")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return [int(row["n"]), int(row["h"])]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = os.path.join(base_dir, "_committed")
-        state = _state(marker)
-        live = state["last_batch"]
-        if live >= batch_id:
-            want = state["fingerprints"].get(str(batch_id))
-            if want is None or _fingerprint(
-                batch_df.select("doc_id")
-            ) != want:
-                raise ValueError(
-                    f"cluster store at {base_dir} was committed through "
-                    f"batch {live} by another checkpoint (replayed id "
-                    f"{batch_id} does not match its committed rows) — "
-                    "use a fresh store dir or the original checkpoint"
-                )
-            return  # replayed batch — already committed
-        new_sigs = mh_signature_table(batch_df)
-        committed_shards = [
-            os.path.join(base_dir, f"sigs_batch={k}")
-            for k in state["shards"]
-        ]
-        standing = (
-            spark.read.parquet(*committed_shards)
-            if committed_shards
-            else new_sigs.limit(0)
-        )
-        # verified near-dup edges touching this batch: new x standing
-        # (all) + new x new (a < b) — across all batches every
-        # qualifying pair forms exactly once
-        nb = _sig_band_rows(new_sigs, "a")
-        cand = nb.join(
-            _sig_band_rows(standing, "b"), ["band_idx", "band_key"]
-        ).unionByName(
-            nb.join(_sig_band_rows(new_sigs, "b"), ["band_idx", "band_key"])
-            .filter(F.col("b_id") > F.col("a_id"))
-        )
-        eq_sum = sum(
-            F.when(F.col(f"ha{i}") == F.col(f"hb{i}"), 1).otherwise(0)
-            for i in range(N_HASHES)
-        )
-        edges = (
-            cand.select("a_id", "b_id", eq_sum.alias("eq"))
-            .groupBy("a_id", "b_id")
-            .agg(F.max("eq").alias("eq"))
-            .filter(F.col("eq") >= INCR_EQ_MIN)
-            .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-            .localCheckpoint(eager=True)
-        )
-        if state["labels_version"] >= 0:
-            labels_old = spark.read.parquet(
-                os.path.join(
-                    base_dir, f"labels_v={state['labels_version']}"
-                )
-            )
-        else:
-            labels_old = edges.select(
-                F.col("u").alias("node"), F.col("u").alias("lbl")
-            ).limit(0)
-        # contract each edge endpoint to its standing label (itself if
-        # unseen) — the quotient graph is bounded by the batch's edges
-        def resolve(col: str) -> DataFrame:
-            lk = labels_old.select(
-                F.col("node").alias(col), F.col("lbl").alias(f"l_{col}")
-            )
-            return lk
-
-        q = (
-            edges.join(resolve("u"), "u", "left")
-            .join(resolve("v"), "v", "left")
-            .select(
-                F.coalesce("l_u", "u").alias("qu"),
-                F.coalesce("l_v", "v").alias("qv"),
-            )
-            .filter(F.col("qu") != F.col("qv"))
-            .distinct()
-        )
-        qdir = q.unionByName(
-            q.select(F.col("qv").alias("qu"), F.col("qu").alias("qv"))
-        ).localCheckpoint(eager=True)
-        # Hash-min + pointer-jump to LABEL FIXPOINT (round-13 advisor:
-        # a fixed round count silently splits any quotient component
-        # whose diameter outruns it, breaking the byte-equality
-        # contract with q_dedup_cluster_cc — the live path has no
-        # oracle to catch that). The loop lives in
-        # operators.components.min_label_cc_pointer_jump, which RAISES
-        # on max_rounds exhaustion rather than returning split labels;
-        # unit-pinned there on a 40-hop path the old fixed-6 loop
-        # would have split.
-        from ..operators.components import min_label_cc_pointer_jump
-
-        qlabels = min_label_cc_pointer_jump(
-            qdir, max_rounds=_CLUSTER_CC_MAX_ROUNDS
-        )
-        qmap = qlabels.filter(F.col("node") != F.col("lbl")).select(
-            F.col("node").alias("old_lbl"), F.col("lbl").alias("new_lbl")
-        )
-        # standing labels plus this batch's previously unseen edge
-        # endpoints (initial label = own id), rewritten through the
-        # quotient map
-        new_nodes = (
-            edges.select(F.col("u").alias("node"))
-            .unionByName(edges.select(F.col("v").alias("node")))
-            .distinct()
-            .join(labels_old.select("node"), "node", "left_anti")
-            .select("node", F.col("node").alias("lbl"))
-        )
-        labels_new = (
-            labels_old.unionByName(new_nodes)
-            .join(qmap, F.col("lbl") == F.col("old_lbl"), "left")
-            .select(
-                "node", F.coalesce("new_lbl", "lbl").alias("lbl")
-            )
-        )
-        write_parquet(
-            new_sigs,
-            os.path.join(base_dir, f"sigs_batch={batch_id}"),
-            mode="overwrite",
-        )
-        write_parquet(
-            labels_new,
-            os.path.join(base_dir, f"labels_v={batch_id}"),
-            mode="overwrite",
-        )
-        fingerprints = dict(state["fingerprints"])
-        fingerprints[str(batch_id)] = _fingerprint(
-            batch_df.select("doc_id")
-        )
-        garbage = (
-            [f"labels_v={state['labels_version']}"]
-            if state["labels_version"] >= 0
-            else []
-        )
-        tmp_marker = marker + ".tmp"
-        with open(tmp_marker, "w") as fh:
-            _json.dump(
-                {
-                    "last_batch": batch_id,
-                    "shards": state["shards"] + [batch_id],
-                    "labels_version": batch_id,
-                    "fingerprints": fingerprints,
-                    "garbage": garbage,
-                },
-                fh,
-            )
-        os.replace(tmp_marker, marker)
-        # Prune by SWEEP (the signature-store / cms_sketch_maintainer
-        # discipline): any labels_v dir that is neither the version the
-        # just-committed marker references nor in its one-cycle grace
-        # list is superseded — including versions leaked by a crash
-        # between a past commit's marker replace and its prune.
-        import shutil
-
-        keep = {f"labels_v={batch_id}"} | set(garbage)
-        for name in os.listdir(base_dir):
-            if not name.startswith("labels_v="):
-                continue
-            if name not in keep:
-                shutil.rmtree(
-                    os.path.join(base_dir, name), ignore_errors=True
-                )
-
-    return apply_batch
-
-
-def committed_clusters(spark, base_dir: str) -> DataFrame:
-    """The committed duplicate-cluster table — identical shape and
-    values to the batch q_dedup_cluster_cc over every ingested doc."""
-    import json as _json
-    import os
-
-    marker = os.path.join(base_dir, "_committed")
-    with open(marker) as fh:
-        state = _json.load(fh)
-    labels = spark.read.parquet(
-        os.path.join(base_dir, f"labels_v={state['labels_version']}")
-    )
-    return (
-        labels.groupBy(F.col("lbl").alias("cluster_id"))
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            (F.count("*") - F.lit(1)).cast("long").alias("n_dropped"),
-            F.sort_array(F.collect_list("node")).alias("doc_ids"),
-        )
-        .orderBy(F.desc("n_docs"), "cluster_id")
-    )

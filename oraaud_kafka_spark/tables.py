@@ -131,12 +131,7 @@ def note_data_computed() -> None:
     DATA_EPOCH += 1
 
 
-def materialize(
-    df: DataFrame,
-    *,
-    reliable: bool | None = None,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def materialize(df: DataFrame, *, checkpoint_dir: str | None = None) -> DataFrame:
     """Eager checkpoint for a multiply-referenced intermediate
     (guide §3.3): the self-join sides' alias-divergent projections
     defeat ReuseExchange, so without materialization the expensive
@@ -152,11 +147,9 @@ def materialize(
     ``localCheckpoint`` stores blocks on executors with lineage
     DISCARDED — fast, but an executor loss mid-query aborts the job,
     and blocks evicted under memory pressure are unrecoverable. For
-    cluster runs set ``reliable=True`` (or pass ``checkpoint_dir``,
-    or set ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` process-wide) and the
-    blocks go through ``DataFrame.checkpoint()`` to the session's
-    fault-tolerant checkpoint dir instead. Local bench/test runs keep
-    the local default — single-JVM, no executor to lose.
+    cluster runs pass ``checkpoint_dir`` and the blocks go through
+    ``DataFrame.checkpoint()`` to that fault-tolerant dir instead. Local
+    runs keep the local default — single-JVM, no executor to lose.
 
     Size discipline: each call site states its checkpointed frame's
     cardinality class in a comment; O(corpus) frames must project to
@@ -171,10 +164,6 @@ def materialize(
     note_data_computed()
     if checkpoint_dir is not None:
         df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        reliable = True
-    if reliable is None:
-        reliable = os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") == "1"
-    if reliable:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 

@@ -1,6 +1,7 @@
 """Regenerate PLANS.md: the finalized (AQE) physical-plan properties of
-every headline query at sf0.01 — the evidence trail for the plan shapes
-tests/test_plans.py pins. Run: python scripts/dump_plans.py
+every registered query at sf0.01, perfbench's headline queries first —
+the evidence trail for the plan shapes tests/test_plans.py pins.
+Run: python scripts/dump_plans.py
 """
 
 from __future__ import annotations
@@ -8,12 +9,13 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 
-from bench import EXTRAS, HEADLINE  # noqa: E402
 from oraaud_kafka_spark import registry  # noqa: E402
 from oraaud_kafka_spark.plans.inspect import plan_report  # noqa: E402
 from oraaud_kafka_spark.session import get_spark  # noqa: E402
+from workloads import HEADLINE  # noqa: E402  (perfbench's query roster)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -31,7 +33,8 @@ def main() -> None:
         "| query | shuffles | joins | codegen stages | pushed filters | notes |",
         "|---|---|---|---|---|---|",
     ]
-    for name in [*HEADLINE, *EXTRAS]:
+    rest = [n for n in registry.all_queries() if n not in HEADLINE]
+    for name in [*HEADLINE, *rest]:
         df = registry.QUERIES[name](spark, SF_DIR)
         r = plan_report(df, execute=True)
         joins = ", ".join(sorted(set(r.joins))) or "—"
@@ -45,7 +48,7 @@ def main() -> None:
             f"| {name} | {r.n_shuffles} | {joins} | {r.codegen_stages} "
             f"| {pushed} | {', '.join(notes) or '—'} |"
         )
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    out = os.path.join(REPO, "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}")

@@ -98,41 +98,15 @@ ALLOWED_UNBOUNDED: dict[str, tuple[str, ...]] = {
     "q_sim_ivf_kmeans_topk": ("Join",) * 4 + ("scan-vec_id",),
     "q_sim_mips_augmented": ("scan-vec_id",),
     "q_sim_knn_eval": ("scan-vec_id",),
-    # pending round-13: the 24 SRP anchors are the vec_id < B*r slice
-    # of the embeddings scan — k-bounded by construction like the
-    # registered similarity family above; the hint appears once per
-    # branch of the triangle self-join (same doubling as the
-    # lsh_bucketed entry)
+    # the 24 SRP anchors are the vec_id < B*r slice of the embeddings
+    # scan — k-bounded by construction like the similarity family
+    # above; the hint appears once per branch of the triangle self-join
+    # (same doubling as the lsh_bucketed entry)
     "q_sim_range_search_eval": ("scan-vec_id",) * 2,
-    # pending round-16: the 32-row PQ codebook is the vec_id < 8 slice
-    # of the embeddings scan (k-bounded like the similarity family);
-    # the hint appears once per reference of the dists subtree (the
-    # min-dist argmin joins dists back to its own aggregate)
-    "q_emb_pq_codes": ("scan-vec_id",) * 2,
-    # pending round-18: every hinted frame is k-bounded — the 32-row PQ
-    # codebook (vec_id < 8 slice, hinted inside the shared
-    # _pq_assignments and under the ADC lookup table), the 320-row lut
-    # (10-query slice JOINed with the codebook — both k-bounded, hence
-    # the 'Join' class), and the 10-query exact-leg slice; counts are
-    # inflated by subtree duplication (codes/lut each feed two branches
-    # of the recall join), never by a data-sized frame.
-    "q_sim_pq_adc_eval": ("Join",) * 2 + ("scan-vec_id",) * 9,
     "q_rag_retrieve_enrich": ("Join", "scan-vec_id"),
     "q_dedup_semantic": ("scan-vec_id",) * 3,
     "q_eval_ndcg_retrieval": ("scan-vec_id",),
     "q_eval_mrr_retrieval": ("scan-vec_id",),
-    # pending round-19: the RRF fusion's hinted frame is the 10-query
-    # vec_id < N_QUERIES slice (k-bounded like the whole similarity
-    # family); the hint appears once per shortlist branch (full-dim and
-    # truncated cosine) of the shared scored subtree.
-    "q_sim_rrf_fusion": ("scan-vec_id",) * 2,
-    # pending round-19: the label-noise centroid table is grouped on
-    # the label domain (the embeddings fixture's 10 class labels —
-    # bounded like the source-label / event-type / nation domains
-    # above) and carries one 64-double array per label; the 4
-    # appearances are subtree duplication (dists feeds both the min
-    # aggregate and the argmin join-back).
-    "q_emb_label_noise": ("grouped-agg",) * 4,
 }
 
 
@@ -181,26 +155,11 @@ def _classify(node) -> str:
 
 
 def _all_query_frames(spark):
-    """Every registered query PLUS the forward registration queues —
-    a pending operator must clear the same hint audit it will face
-    once registered, not discover it at registration time."""
-    from oraaud_kafka_spark.queries.pending import (
-        PENDING_R15,
-        PENDING_R16,
-        PENDING_R17,
-        PENDING_R18,
-        PENDING_R19,
-    )
-
-    registry.load_all()
-    for name in registry.all_queries():
-        yield name, registry.QUERIES[name](spark, SF_DIR)
-    for queue in (PENDING_R15, PENDING_R16, PENDING_R17, PENDING_R18, PENDING_R19):
-        for name, (fn, _oracle) in queue.items():
-            yield name, fn(spark, SF_DIR)
+    for name, fn in registry.all_queries().items():
+        yield name, fn(spark, SF_DIR)
 
 
-@pytest.mark.slow  # ~1 min: builds every registered + pending plan
+@pytest.mark.slow  # ~1 min: builds every registered plan
 def test_no_forced_broadcast_of_scale_growing_frames(spark, monkeypatch):
     # See through tables.materialize (round-14): an eager localCheckpoint
     # replaces its lineage with a LogicalRDD leaf, hiding any hints below

@@ -1,8 +1,11 @@
 """COVERAGE.md stays in lockstep with the registry: every registered
-query name must be listed, and the stated counts must match."""
+query name must be listed, and the stated counts must match. The
+registry in turn covers every query function its modules define."""
 
 from __future__ import annotations
 
+import importlib
+import inspect
 import re
 from pathlib import Path
 
@@ -27,77 +30,20 @@ def test_coverage_doc_counts_match_registry():
     assert int(m.group(2)) == len(registry.ORACLES)
 
 
-def test_driver_window_is_front_list():
-    """The driver's correctness gate checks a bounded prefix (~50) of
-    queries(). registry._FRONT pins exactly which queries occupy it;
-    this asserts the pin actually works and stays well-formed: 50 unique
-    registered names leading the dict, every one oracle-backed so the
-    round yields full hash-checked rows, never weaker rows-only ones."""
-    from oraaud_kafka_spark import registry
-
-    names = list(registry.all_queries())
-    assert len(registry._FRONT) == 50
-    assert len(set(registry._FRONT)) == 50, "duplicate names in _FRONT"
-    assert tuple(names[:50]) == registry._FRONT
-    no_oracle = [n for n in registry._FRONT if n not in registry.ORACLES]
-    assert not no_oracle, f"front-window queries without oracle: {no_oracle}"
-
-
-def test_verification_ledger_in_sync_with_artifacts():
-    """The COVERAGE.md driver-verification ledger is generated from the
-    CORRECTNESS_r*.json artifacts; a new QUERY must force a regeneration
-    (python scripts/gen_ledger.py --write) or this drifts.
-
-    The comparison regenerates through the ledger's OWN max recorded
-    round: a post-freeze driver artifact (CORRECTNESS_r{N+1}.json landing
-    after the round-N commit freeze) must NOT redden the suite — that
-    class fired in rounds 7 and 9. Rotation time regenerates with all
-    artifacts, bumping the recorded max."""
-    import sys
-
-    sys.path.insert(0, str(DOC.parent / "scripts"))
-    import gen_ledger
-
-    text = DOC.read_text()
-    assert gen_ledger.BEGIN in text, "ledger section missing from COVERAGE.md"
-    current = text.split(gen_ledger.BEGIN)[1].split(gen_ledger.END)[0]
-    cap = gen_ledger.max_recorded_round(current)
-    section = gen_ledger.generate(max_round=cap)
-    expected = section.split(gen_ledger.BEGIN)[1].split(gen_ledger.END)[0]
-    assert current == expected, (
-        "ledger stale — run: python scripts/gen_ledger.py --write"
-    )
-
-
-def test_ledger_freshness_warns_on_unrecorded_artifact():
-    """Non-gating freshness probe (round-11 advice): capping the sync
-    test at the ledger's own max round means a CORRECTNESS artifact
-    that lands WITHOUT a regeneration is never flagged again. A
-    post-freeze artifact (newest round == ledger max + 1) is the normal
-    between-rounds state and stays silent; anything older than that
-    means the rotation-time regeneration was skipped — warn loudly (a
-    hard fail would redden every post-freeze commit, the rounds-7/9
-    failure class this design replaced)."""
-    import glob
-    import sys
-    import warnings
-
-    sys.path.insert(0, str(DOC.parent / "scripts"))
-    import gen_ledger
-
-    arts = glob.glob(str(DOC.parent / "CORRECTNESS_r*.json"))
-    if not arts:
-        return
-    newest = max(
-        int(re.search(r"r0*(\d+)", Path(p).name).group(1)) for p in arts
-    )
-    current = DOC.read_text().split(gen_ledger.BEGIN)[1].split(gen_ledger.END)[0]
-    cap = gen_ledger.max_recorded_round(current) or 0
-    if newest > cap + 1:
-        warnings.warn(
-            f"COVERAGE.md ledger records through r{cap} but "
-            f"CORRECTNESS_r{newest}.json exists — a rotation-time "
-            "regeneration was skipped; run: "
-            "python scripts/gen_ledger.py --write",
-            stacklevel=1,
-        )
+def test_every_query_function_is_registered():
+    """No unregistered operator queues: every public ``q*_`` function a
+    registry module defines is a registered query, so nothing is built,
+    tested and maintained without the registry (and its parity sweep)
+    ever running it."""
+    registry.load_all()
+    registered = {fn.__wrapped__ for fn in registry.QUERIES.values()}
+    unregistered = [
+        f"{mod}.{name}"
+        for mod in registry._MODULES
+        for name, obj in vars(importlib.import_module(mod)).items()
+        if re.match(r"q\d*_", name)
+        and inspect.isfunction(obj)
+        and obj.__module__ == mod
+        and obj not in registered
+    ]
+    assert not unregistered, f"unregistered query functions: {unregistered}"

@@ -96,6 +96,29 @@ def test_batch_decoration_semantics(spark, tmp_path):
     assert withheld.count() == 1
 
 
+def test_gate_ignores_trailing_line_breaks(spark, tmp_path):
+    """A writer that ends the file with a newline (LF or CRLF, with
+    stray spaces/tabs) has still finished it: the gate must pass it,
+    and still withhold a truncated file that ends in a newline."""
+    doc = _fix_ts(AUDIT_DOC.format(sid=9, eid=3, user="SYS"))
+    files = {
+        "orcl_ora_1_lf.xml": doc + "\n",
+        "orcl_ora_2_crlf.xml": doc.replace("\n", "\r\n") + "\r\n",
+        "orcl_ora_3_mixed.xml": doc + " \t\r\n\n",
+        "orcl_ora_4_cut.xml": doc.rsplit("</Audit>", 1)[0] + "\n",
+    }
+    for name, content in files.items():
+        (tmp_path / name).write_bytes(content.encode())
+    df = read_audit_batch(spark, str(tmp_path), hostname="h")
+    got = {os.path.basename(r.src_file): r.is_complete for r in df.collect()}
+    assert got == {
+        "orcl_ora_1_lf.xml": True,
+        "orcl_ora_2_crlf.xml": True,
+        "orcl_ora_3_mixed.xml": True,
+        "orcl_ora_4_cut.xml": False,
+    }
+
+
 def test_streaming_ingest_memory_sink(spark, tmp_path):
     make_corpus(tmp_path)
     stream = build_ingest_stream(

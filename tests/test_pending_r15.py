@@ -1,83 +1,31 @@
-"""Parity sweep for the round-15 registration queue
-(oraaud_kafka_spark/queries/pending.py PENDING_R15): each pending
-operator runs Spark-vs-DuckDB at the local test SF exactly the way the
-driver gate will once it is registered — so registration adds only the
-@query decorator and a _FRONT slot, never cold code."""
+"""Parity of the three operators registered out of the round-15
+pending queue (q_graph_link_prediction, q_sample_neyman_allocation,
+q_text_bm25_topk) at the local test SF. Unlike the registry-wide
+test_parity sweep, this also requires a non-empty result, so an
+operator whose oracle and Spark plan both return nothing on the
+fixture cannot pass vacuously."""
 
 from __future__ import annotations
 
 import pytest
 
-from oraaud_kafka_spark.queries.pending import PENDING_R15
+from oraaud_kafka_spark import registry
 from oraaud_kafka_spark.testing import compare_frames, run_oracle
 
 from .conftest import SF_DIR
 
+registry.load_all()
 
-@pytest.mark.parametrize("name", sorted(PENDING_R15))
+_R15 = (
+    "q_graph_link_prediction",
+    "q_sample_neyman_allocation",
+    "q_text_bm25_topk",
+)
+
+
+@pytest.mark.parametrize("name", _R15)
 def test_pending_r15_matches_oracle(spark, name):
-    fn, oracle = PENDING_R15[name]
-    got = fn(spark, SF_DIR).toPandas()
-    probs = compare_frames(got, run_oracle(oracle, SF_DIR))
+    got = registry.QUERIES[name](spark, SF_DIR).toPandas()
+    probs = compare_frames(got, run_oracle(registry.ORACLES[name], SF_DIR))
     assert not probs, f"{name}: {probs}"
     assert len(got) > 0, f"{name}: empty result at {SF_DIR}"
-
-
-def test_bm25_result_structure(spark):
-    """Five data-derived query terms, a full 1..3 ranking per term,
-    positive scores, and within each term the scores are non-increasing
-    in rank (the window order actually ordered)."""
-    from oraaud_kafka_spark.queries.pending import _BM25_Q_N, _BM25_TOP
-
-    fn, _ = PENDING_R15["q_text_bm25_topk"]
-    got = fn(spark, SF_DIR).toPandas()
-    assert got["query_term"].nunique() == _BM25_Q_N
-    assert (got["score"] > 0).all()
-    for _, grp in got.groupby("query_term"):
-        assert sorted(grp["rank"]) == list(range(1, _BM25_TOP + 1))
-        ordered = grp.sort_values("rank")["score"].tolist()
-        assert ordered == sorted(ordered, reverse=True)
-
-
-def test_link_prediction_excludes_existing_edges(spark):
-    """Every predicted link is a genuinely MISSING edge (the anti join
-    held), jaccard sits in (0, 1], and common <= union."""
-    from oraaud_kafka_spark.queries.graphs import _copurchase_edges
-
-    fn, _ = PENDING_R15["q_graph_link_prediction"]
-    got = fn(spark, SF_DIR).toPandas()
-    edges = {
-        (r.u, r.v) for r in _copurchase_edges(spark, SF_DIR).collect()
-    }
-    for r in got.itertuples():
-        assert (r.part_a, r.part_b) not in edges
-        assert r.part_a < r.part_b
-    assert ((got["jaccard"] > 0) & (got["jaccard"] <= 1.0)).all()
-    assert (got["common"] <= got["unions"]).all()
-
-
-def test_neyman_allocations_hit_the_budget_exactly(spark):
-    """Largest-remainder integer allocations must sum to the budget for
-    BOTH designs, and no stratum can get a negative or
-    above-population allocation."""
-    from oraaud_kafka_spark.queries.pending import _NEYMAN_BUDGET
-
-    fn, _ = PENDING_R15["q_sample_neyman_allocation"]
-    got = fn(spark, SF_DIR).toPandas()
-    assert got["n_neyman"].sum() == _NEYMAN_BUDGET
-    assert got["n_proportional"].sum() == _NEYMAN_BUDGET
-    assert (got["n_neyman"] >= 0).all()
-    assert (got["n_proportional"] >= 0).all()
-
-
-@pytest.mark.parametrize("name", sorted(PENDING_R15))
-def test_pending_r15_matches_oracle_at_correctness_sf(spark, name):
-    """The same sweep at the DRIVER's correctness SF — committed, not
-    run-by-hand (see test_pending_r13)."""
-    from .conftest import SF_DIR_CORRECTNESS
-
-    fn, oracle = PENDING_R15[name]
-    got = fn(spark, SF_DIR_CORRECTNESS).toPandas()
-    probs = compare_frames(got, run_oracle(oracle, SF_DIR_CORRECTNESS))
-    assert not probs, f"{name}: {probs}"
-    assert len(got) > 0, f"{name}: empty result at {SF_DIR_CORRECTNESS}"

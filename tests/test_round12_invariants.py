@@ -1,9 +1,9 @@
-"""Round-12 registration invariants: the PENDING_R12 trio (theta-sketch
+"""Round-12 registration invariants: the round-12 trio (theta-sketch
 audience overlap, dynamic-gap sessionization, conversion-rate rollup)
-is now registered in queries/aggregates.py and queries/event_time.py —
-the sf0.001 parity moved into the registry-wide test_parity sweep, and
+is registered in queries/aggregates.py and queries/event_time.py —
+the sf0.001 parity runs in the registry-wide test_parity sweep, and
 the driver-SF sweep plus the operator-specific certifications live
-here so registration can never weaken what the pending tests pinned."""
+here."""
 
 from __future__ import annotations
 

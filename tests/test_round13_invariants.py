@@ -1,10 +1,9 @@
-"""Round-13 registration invariants: the PENDING_R13 trio (additive
+"""Round-13 registration invariants: the round-13 trio (additive
 Holt-Winters, SRP range-search S-curve eval, CDC sub-file chunking) is
-now registered in queries/event_time.py, llm/similarity.py and
-llm/multimodal.py — the sf0.001 parity moved into the registry-wide
+registered in queries/event_time.py, llm/similarity.py and
+llm/multimodal.py — the sf0.001 parity runs in the registry-wide
 test_parity sweep, and the driver-SF sweep plus the operator-specific
-certifications live here so registration can never weaken what the
-pending tests pinned."""
+certifications live here."""
 
 from __future__ import annotations
 

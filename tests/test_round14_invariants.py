@@ -1,10 +1,9 @@
-"""Round-14 registration invariants: the PENDING_R14 trio (co-purchase
+"""Round-14 registration invariants: the round-14 trio (co-purchase
 triangle count, CMS heavy-hitter certification, Bloom semi-join prune
-eval) is now registered in queries/graphs.py, queries/aggregates.py and
-queries/joins.py — the sf0.001 parity moved into the registry-wide
+eval) is registered in queries/graphs.py, queries/aggregates.py and
+queries/joins.py — the sf0.001 parity runs in the registry-wide
 test_parity sweep, and the driver-SF sweep plus the operator-specific
-certifications live here so registration can never weaken what the
-pending tests pinned."""
+certifications live here."""
 
 from __future__ import annotations
 
@@ -22,24 +21,6 @@ _R14_NEW = (
     "q_agg_cms_heavy_hitters",
     "q_join_bloom_prune_eval",
 )
-
-
-def test_r14_new_ops_were_driver_verified():
-    """The three ops new in round 14 shipped inside that round's driver
-    window (never-verified rows are forbidden); since round 15 they
-    cycle with the ledger like every other green row, so the durable
-    invariant is the r14 artifact itself: all three present and green."""
-    import json
-    import os
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "CORRECTNESS_r14.json"
-    )
-    rows = json.load(open(path))
-    assert len(registry._FRONT) == 50
-    for name in _R14_NEW:
-        row = rows[name]
-        assert row["rows_match"] and row["schema_match"] and row["hash_match"]
 
 
 @pytest.mark.parametrize("name", _R14_NEW)

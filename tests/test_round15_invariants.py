@@ -8,6 +8,12 @@ carries the computed state, so every bench sample after the first read
 checkpointed blocks / baked-in literals instead of recomputing from
 parquet — result caching, which the bench forbids. The fix: builds that
 bump tables.DATA_EPOCH are never memoized. These tests pin the fix.
+
+Round 15 also registered three operators (BM25 top-k in llm/text.py,
+co-purchase link prediction in queries/graphs.py, Neyman allocation in
+llm/packing.py). Their sf0.001 parity runs in the registry-wide
+test_parity sweep; the sf0.01 sweep and the operator-specific
+structure checks live here.
 """
 
 from __future__ import annotations
@@ -15,8 +21,9 @@ from __future__ import annotations
 import pytest
 
 from oraaud_kafka_spark import registry, tables
+from oraaud_kafka_spark.testing import compare_frames, run_oracle
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, SF_DIR_CORRECTNESS
 
 registry.load_all()
 
@@ -65,8 +72,8 @@ def test_plan_only_builds_keep_the_memo(spark, name):
 
 
 def test_materialize_reliable_checkpoint(spark, tmp_path):
-    """materialize(reliable=True) goes through DataFrame.checkpoint()
-    against a fault-tolerant dir (the operators.components discipline,
+    """materialize(checkpoint_dir=...) goes through DataFrame.checkpoint()
+    against that fault-tolerant dir (the operators.components discipline,
     verdict r14 item 2) — lineage recomputes on executor loss instead
     of aborting the job."""
     df = spark.range(10)
@@ -79,7 +86,6 @@ def test_materialize_reliable_checkpoint(spark, tmp_path):
     assert tables.materialize(spark.range(5)).count() == 5
 
 
-@pytest.mark.slow
 def test_registry_sweep_no_build_time_jobs_escape_the_bypass(spark):
     """Completeness net for note_data_computed(): build EVERY registered
     query under a unique job group; if any Spark job ran during the
@@ -109,3 +115,70 @@ def test_registry_sweep_no_build_time_jobs_escape_the_bypass(spark):
         "builds ran Spark jobs but were memoized (missing "
         f"note_data_computed at an action site): {missed}"
     )
+
+
+_R15_NEW = (
+    "q_text_bm25_topk",
+    "q_graph_link_prediction",
+    "q_sample_neyman_allocation",
+)
+
+
+@pytest.mark.parametrize("name", _R15_NEW)
+def test_r15_new_ops_match_oracle_at_correctness_sf(spark, name):
+    """The oracle sweep at sf0.01, so a divergence that only shows
+    there cannot hide behind the sf0.001 parity test."""
+    got = registry.QUERIES[name](spark, SF_DIR_CORRECTNESS).toPandas()
+    probs = compare_frames(
+        got, run_oracle(registry.ORACLES[name], SF_DIR_CORRECTNESS)
+    )
+    assert not probs, f"{name}: {probs}"
+    assert len(got) > 0, f"{name}: empty result at {SF_DIR_CORRECTNESS}"
+
+
+def test_bm25_result_structure(spark):
+    """Five data-derived query terms, a full 1..3 ranking per term,
+    positive scores, and within each term the scores are non-increasing
+    in rank (the window order actually ordered)."""
+    from oraaud_kafka_spark.llm.text import _BM25_Q_N, _BM25_TOP
+
+    got = registry.QUERIES["q_text_bm25_topk"](spark, SF_DIR).toPandas()
+    assert got["query_term"].nunique() == _BM25_Q_N
+    assert (got["score"] > 0).all()
+    for _, grp in got.groupby("query_term"):
+        assert sorted(grp["rank"]) == list(range(1, _BM25_TOP + 1))
+        ordered = grp.sort_values("rank")["score"].tolist()
+        assert ordered == sorted(ordered, reverse=True)
+
+
+def test_link_prediction_excludes_existing_edges(spark):
+    """Every predicted link is a genuinely MISSING edge (the anti join
+    held), jaccard sits in (0, 1], and common <= union."""
+    from oraaud_kafka_spark.queries.graphs import _copurchase_edges
+
+    got = registry.QUERIES["q_graph_link_prediction"](
+        spark, SF_DIR
+    ).toPandas()
+    edges = {
+        (r.u, r.v) for r in _copurchase_edges(spark, SF_DIR).collect()
+    }
+    for r in got.itertuples():
+        assert (r.part_a, r.part_b) not in edges
+        assert r.part_a < r.part_b
+    assert ((got["jaccard"] > 0) & (got["jaccard"] <= 1.0)).all()
+    assert (got["common"] <= got["unions"]).all()
+
+
+def test_neyman_allocations_hit_the_budget_exactly(spark):
+    """Largest-remainder integer allocations must sum to the budget for
+    BOTH designs, and no stratum can get a negative or
+    above-population allocation."""
+    from oraaud_kafka_spark.llm.packing import _NEYMAN_BUDGET
+
+    got = registry.QUERIES["q_sample_neyman_allocation"](
+        spark, SF_DIR
+    ).toPandas()
+    assert got["n_neyman"].sum() == _NEYMAN_BUDGET
+    assert got["n_proportional"].sum() == _NEYMAN_BUDGET
+    assert (got["n_neyman"] >= 0).all()
+    assert (got["n_proportional"] >= 0).all()

@@ -13,7 +13,6 @@ import json
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -23,7 +22,6 @@ from pyspark.sql.types import (
 )
 
 from oraaud_kafka_spark.streaming.analytics import (
-    retry_until_complete,
     stream_static_enrich,
     stream_stream_join,
     streaming_dedup,
@@ -205,45 +203,6 @@ def test_stream_stream_join_time_bounded(spark, tmp_path):
     try:
         pairs = {(r.click_id, r.buy_id) for r in spark.table("ssj").collect()}
         assert pairs == {(1, 11)}
-    finally:
-        q.stop()
-
-
-RETRY_SCHEMA = StructType(
-    [
-        StructField("src_file", StringType()),
-        StructField("value", StringType()),
-        StructField("is_complete", BooleanType()),
-    ]
-)
-
-
-def test_retry_until_complete_state_across_batches(spark, tmp_path):
-    d = tmp_path / "retry"
-    d.mkdir()
-    # batch 1: file A truncated, file B complete. batch 2: A's complete
-    # version arrives -> emitted once with attempts=2 (the reference's
-    # requeue-then-ship path, KafkaJob.java:81-88).
-    _write_jsonl(
-        d / "b1.json",
-        [
-            {"src_file": "a.xml", "value": "<Audit>partial", "is_complete": False},
-            {"src_file": "b.xml", "value": "<Audit>ok</Audit>", "is_complete": True},
-        ],
-    )
-    _write_jsonl(
-        d / "b2.json",
-        [{"src_file": "a.xml", "value": "<Audit>full</Audit>", "is_complete": True}],
-    )
-    stream = _stream_json(spark, d, RETRY_SCHEMA, latestFirst="false")
-    q = _run_to_memory(retry_until_complete(stream), "retry")
-    try:
-        rows = {r.src_file: r for r in spark.table("retry").collect()}
-        assert set(rows) == {"a.xml", "b.xml"}
-        assert rows["b.xml"].n_attempts == 1
-        assert rows["a.xml"].n_attempts == 2
-        assert rows["a.xml"].value == "<Audit>full</Audit>"
-        assert rows["a.xml"].n_bytes == len("<Audit>full</Audit>")
     finally:
         q.stop()
 
@@ -1754,7 +1713,7 @@ def test_interval_latency_monitor_drops_late_purchase(spark, tmp_path):
 def test_conversion_rate_monitor_matches_batch_twin(spark, tmp_path):
     """The left-outer interval join + watermark dedup + tumbling rollup
     (THREE chained stateful operators) must emit, in append mode,
-    exactly the pending batch query q_time_conversion_rate's rows once
+    exactly the batch query q_time_conversion_rate's rows once
     sentinels advance both watermarks past the fixture — including the
     never-converted clicks the inner-join latency monitor cannot see."""
     import pandas as pd
@@ -1841,7 +1800,7 @@ def test_conversion_rate_monitor_matches_batch_twin(spark, tmp_path):
 
 def test_dynamic_session_monitor_matches_batch_twin(spark, tmp_path):
     """The dynamic-gap session monitor must emit, in append mode,
-    exactly the pending batch query q_time_session_dynamic_gap's rows
+    exactly the batch query q_time_session_dynamic_gap's rows
     once a far-future sentinel advances the watermark past every
     fixture session — under genuinely incremental multi-batch input."""
     import os
@@ -2360,7 +2319,7 @@ def test_cms_maintainer_equals_oneshot_sketch(spark, tmp_path):
     """Cell-wise-additive merge is exact: the maintained CMS grid after
     three batches (with an at-least-once replay in the middle) must be
     byte-equal to the one-shot grid over all rows — the live leg of the
-    pending batch q_agg_cms_heavy_hitters merge certificate."""
+    batch q_agg_cms_heavy_hitters merge certificate."""
     import os
 
     from oraaud_kafka_spark.queries.aggregates import _CMS_D, _cms_bucket
