@@ -1797,9 +1797,6 @@ def q_dedup_containment_multiband(
 # equi-join needs no second join back to a signature table; the only
 # shuffles carry band keys + signatures, never text, and the standing
 # corpus contributes O(matching band rows), never O(C^2) pairs.
-# The physical nightly loop (versioned append-only parquet store +
-# atomic marker commit + at-least-once replay no-op) is
-# signature_store_maintainer below, parity-pinned to this query.
 # ---------------------------------------------------------------------------
 
 INCR_SHARD_MOD = 4
@@ -1808,7 +1805,7 @@ INCR_EQ_MIN = 8  # of N_HASHES=16 equal components -> est Jaccard >= 0.5
 
 
 def mh_signature_table(docs: DataFrame) -> DataFrame:
-    """``doc_id, h0..h15, band0..band3`` — THE persisted standing-store
+    """``doc_id, h0..h15, band0..band3`` — the standing-store signature
     schema for cross-run dedup. Pure per-doc expressions (one md5 per
     shingle, zero shuffles); docs with < 3 tokens carry no signature
     and are absent (they cannot near-dup under word-3-gram shingling)."""
@@ -1849,13 +1846,10 @@ def incremental_dedup_decisions(
     new_ids: DataFrame,
     new_sigs: DataFrame,
     standing_sigs: DataFrame,
-    corpus_pred=None,
 ) -> DataFrame:
     """Keep/drop decision per NEW doc against the standing store and
-    the lower-id docs of its own shard — the ONE definition of the
-    cross-run dedup rule, shared by the registered q_dedup_incremental
-    (standing = the corpus split) and signature_store_maintainer
-    (standing = the persisted parquet store).
+    the lower-id docs of its own shard — the cross-run dedup rule of
+    the registered q_dedup_incremental (standing = the corpus split).
 
     ``new_ids``: one (doc_id) row per incoming doc, including docs too
     short to sign (trivially kept). Output per doc: action keep|drop,
@@ -1863,36 +1857,16 @@ def incremental_dedup_decisions(
     smallest matching doc_id within that source, n_candidates = distinct
     earlier band-collision candidates before verification.
 
-    ``corpus_pred`` (Column -> boolean Column) classifies an EARLIER
-    doc's id as corpus-member vs shard-member. Default None classifies
-    by table: standing docs are 'corpus', same-batch docs 'shard' —
-    correct when each standing shard is a prior RUN (e.g. one
-    micro-batch per nightly ingest). When one logical shard spans
-    several batches that default MIS-LABELS earlier-batch shard docs
-    as 'corpus' (and may steal dup_of from a true corpus match), so a
-    maintainer replaying the registered rule must pass the SAME
-    membership predicate the rule uses (doc_id % INCR_SHARD_MOD ==
-    INCR_SHARD_REM); shard-class standing docs then count only when
-    old_id < new_id, exactly as the one-shot union rule demands — which
-    also requires shard batches to arrive in ascending-id order for
-    incremental == recompute to hold."""
+    Standing docs are 'corpus', same-batch docs 'shard'."""
     nb = _sig_band_rows(new_sigs, "new")
     standing_cand = nb.join(
         _sig_band_rows(standing_sigs, "old"), ["band_idx", "band_key"]
+    ).withColumn("is_corpus", F.lit(True))
+    same_cand = (
+        nb.join(_sig_band_rows(new_sigs, "old"), ["band_idx", "band_key"])
+        .filter(F.col("old_id") < F.col("new_id"))
+        .withColumn("is_corpus", F.lit(False))
     )
-    same_cand = nb.join(
-        _sig_band_rows(new_sigs, "old"), ["band_idx", "band_key"]
-    ).filter(F.col("old_id") < F.col("new_id"))
-    if corpus_pred is None:
-        standing_cand = standing_cand.withColumn("is_corpus", F.lit(True))
-        same_cand = same_cand.withColumn("is_corpus", F.lit(False))
-    else:
-        standing_cand = standing_cand.withColumn(
-            "is_corpus", corpus_pred(F.col("old_id"))
-        ).filter(F.col("is_corpus") | (F.col("old_id") < F.col("new_id")))
-        same_cand = same_cand.withColumn(
-            "is_corpus", corpus_pred(F.col("old_id"))
-        )
     cand = standing_cand.unionByName(same_cand)
     eq_sum = sum(
         F.when(F.col(f"hnew{i}") == F.col(f"hold{i}"), 1).otherwise(0)

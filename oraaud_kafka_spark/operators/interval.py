@@ -1,11 +1,8 @@
-"""Shared interval-join latency pieces — the ONE definition of the
-click→purchase attribution semantics, used by BOTH the registered
-batch query (queries/event_time.py q_time_interval_latency) and its
-streaming twin (streaming/analytics.py interval_latency_monitor).
-The two are parity-pinned byte-equal in tests/test_streaming.py; a
-semantic edit (lag units, window width, the bound, the division
-shape) made HERE reaches both sides at once instead of silently
-diverging one of two hand-kept copies.
+"""Interval-join latency pieces — the ONE definition of the
+click→purchase attribution semantics (lag units, window width, the
+bound, the division shape), used by the registered batch queries
+q_time_interval_latency and q_time_conversion_rate
+(queries/event_time.py).
 
 Frames entering these helpers carry (c_user, c_ts) / (p_user, p_ts):
 the click and purchase sides with disjoint column names, so the same
@@ -64,13 +61,11 @@ CONVERSION_WINDOW = "1 hour"
 
 
 def conversion_rate_select(grouped: DataFrame) -> DataFrame:
-    """Final projection of the conversion-rate rollup — the ONE place
-    the output names and the rate division live, shared by the batch
-    twin (queries/event_time.py q_time_conversion_rate) and the monitor
-    (streaming/analytics.py conversion_rate_monitor) exactly as
-    interval_latency_rollup is shared by the latency pair. ``grouped``
-    carries (w, n_clicks, n_converted); the division is the single
-    IEEE op both the oracle and the monitor state."""
+    """Final projection of the conversion-rate rollup
+    (queries/event_time.py q_time_conversion_rate) — the ONE place the
+    output names and the rate division live. ``grouped`` carries
+    (w, n_clicks, n_converted); the division is the single IEEE op the
+    oracle also performs."""
     return grouped.select(
         F.col("w.start").alias("click_hour"),
         "n_clicks",

@@ -1,18 +1,13 @@
-"""Shared dynamic-gap sessionization pieces — the ONE definition of
-the per-event-type session gap and the session rollup, used by BOTH
-the batch query (queries/event_time.py q_time_session_dynamic_gap)
-and its streaming twin (streaming/analytics.py
-dynamic_session_monitor). The two are parity-pinned byte-equal in
-tests/test_streaming.py; a semantic edit (gap durations, the keep-alive
-event type, the rollup shape) made HERE reaches both sides at once
-instead of silently diverging one of two hand-kept copies.
+"""Dynamic-gap sessionization pieces — the ONE definition of the
+per-event-type session gap and the session rollup, used by the batch
+query q_time_session_dynamic_gap (queries/event_time.py).
 
 Semantics: Spark-4 dynamic session windows — each event keeps its
 user's session alive for a PER-EVENT gap (clicks 30 min, everything
 else 10 min); sessions merge under the engine's half-open rule (an
 event joins a session iff its time < the running max of event end
 times). NULL-ts / NULL-user rows carry no session position and are
-excluded identically on both sides.
+excluded, as in the query's DuckDB oracle.
 """
 
 from __future__ import annotations

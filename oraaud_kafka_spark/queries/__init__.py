@@ -73,10 +73,9 @@ def sql_davg(expr: str) -> str:
 # reduced mod ``mod`` — identical on both engines (md5 is
 # engine-independent; conv/CAST of a 12-hex-digit slice fits a BIGINT
 # exactly). THE one definition behind the CMS buckets
-# (queries/aggregates.py), the Bloom bit positions (queries/joins.py)
-# and the cms_sketch_maintainer (streaming/analytics.py), so a recipe
-# change cannot diverge an operator from its oracle or a monitor from
-# its batch twin.
+# (queries/aggregates.py) and the Bloom bit positions
+# (queries/joins.py), so a recipe change cannot diverge an operator
+# from its oracle.
 def md5_mod(salt: str, key, mod: int) -> Column:
     return (
         F.conv(

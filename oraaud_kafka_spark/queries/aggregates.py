@@ -3088,15 +3088,14 @@ def q_agg_theta_audience_overlap(
 # cells — never an underestimate, over by at most (e/w)*N w.h.p.
 # (Cormode & Muthukrishnan 2005). Built manually from the repo's
 # deterministic md5 hash discipline (queries.md5_mod) so both engines
-# run the identical grid — and so the live cms_sketch_maintainer
-# (streaming/analytics.py) shares the exact bucket recipe. The 100 TB
-# story is double: (1) ONE partial-agg'd pass collapses any fact volume
-# to d*w = 2048 cells, after which every frequency question costs a
-# broadcast lookup, never a rescan; (2) the sketch is MERGEABLE by
-# cell-wise addition — this query builds per-priority sketches, merges
-# them, and certifies merged == directly-built (the q_time_rollup_merge
-# algebra) plus est >= exact with slack within the e/w bound via
-# integer cross-multiplication (no float decides).
+# run the identical grid. The 100 TB story is double: (1) ONE
+# partial-agg'd pass collapses any fact volume to d*w = 2048 cells,
+# after which every frequency question costs a broadcast lookup, never
+# a rescan; (2) the sketch is MERGEABLE by cell-wise addition — this
+# query builds per-priority sketches, merges them, and certifies
+# merged == directly-built (the q_time_rollup_merge algebra) plus
+# est >= exact with slack within the e/w bound via integer
+# cross-multiplication (no float decides).
 # ---------------------------------------------------------------------------
 
 _CMS_D = 4

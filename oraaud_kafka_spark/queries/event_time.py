@@ -1127,9 +1127,7 @@ def q_time_ewma_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both engines: a sequential recurrence needs a TOTAL order (NULL ts
     # has no position; NULL event_id leaves ties order-ambiguous —
     # Spark's array_sort and DuckDB's ORDER BY also disagree on NULL
-    # placement) and a NULL value would NaN-poison the level. The
-    # streaming twin (_ewma_fn) applies the identical rule, so monitor
-    # state over any prefix matches this query on the same rows.
+    # placement) and a NULL value would NaN-poison the level.
     e = load(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
         & F.col("event_id").isNotNull()
@@ -1669,7 +1667,7 @@ ORDER BY user_id
 
 @query("q_time_holt_trend", oracle=_HOLT_ORACLE)
 def q_time_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same fold-totality rule as q_time_ewma_level / the streaming twins
+    # same fold-totality rule as q_time_ewma_level
     e = load(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
         & F.col("event_id").isNotNull()
@@ -2704,10 +2702,8 @@ def q_time_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Interval-join latency rollup: the batch twin of the streaming
-# stream-stream interval join with watermarks (SURVEY §2.2 streaming
-# kit; streaming/analytics.py interval_latency_monitor is the live
-# form — parity-pinned against this query in tests/test_streaming.py).
+# Interval-join latency rollup: the batch form of a stream-stream
+# interval join with watermarks (SURVEY §2.2 streaming kit).
 # Semantics: every purchase a user makes within (0, 30 min] of one of
 # their clicks is an attributed conversion; report per click-hour how
 # many conversions landed and how fast. Scale shape: equi-join on
@@ -2760,8 +2756,7 @@ def q_time_interval_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # half-open merge rule exactly: an event starts a new session iff its
 # time >= the running max of (ts_i + gap_i) over all earlier events of
 # the key, session end = max event end. The gap expression and rollup
-# live ONCE in operators/sessions.py, shared with the streaming twin
-# dynamic_session_monitor (parity-pinned in tests/test_streaming.py).
+# live in operators/sessions.py.
 # ---------------------------------------------------------------------------
 
 
@@ -2826,9 +2821,7 @@ def q_time_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the per-hour CONVERSION RATE (not just the latency of conversions)
 # is reportable. Same equi-join-on-user shape; the click key is its
 # event_id so the one-to-many purchase fan-out never double-counts a
-# click. Exact integer counts, one IEEE division. Streaming twin:
-# streaming/analytics.py conversion_monitor (three chained stateful
-# operators), parity-pinned byte-equal in tests/test_streaming.py.
+# click. Exact integer counts, one IEEE division.
 # ---------------------------------------------------------------------------
 
 _CONVERSION_RATE_ORACLE = """
@@ -2890,9 +2883,9 @@ def q_time_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — the seasonal rung above q_time_holt_trend on the forecasting ladder
 # (naive -> seasonal-naive -> EWMA -> Holt -> Holt-Winters), for the
 # series q_time_seasonality_strength already showed carries an
-# hour-of-day signal (its live twin is streaming/analytics.hw_levels).
+# hour-of-day signal.
 # Level + trend + a 24-slot hour-of-day seasonal
-# vector fold together, zero-seeded like the EWMA/Holt twins; the
+# vector fold together, zero-seeded like the EWMA/Holt folds; the
 # one-step forecast is level + trend + season[(last_hour + 1) % 24].
 # Scale shape: raw events collapse to the bounded (type x hour) grain
 # in ONE map+partial-agg pass; the sequential fold then runs over

@@ -167,12 +167,11 @@ def compact_parquet(
     streaming-ingested lakehouse needs: streaming sinks and frequent
     appends leave thousands of KB-scale files whose per-file open/footer
     cost dominates scans and floods the file listing. Rewrite the
-    dataset (one directory, or a LIST of append-only shard directories
-    — the signature_store_maintainer shape) into ~``target_file_mb``
-    files sized from the ACTUAL on-disk bytes (not a guessed partition
-    count). Returns the file count written. At scale, run per
-    partition-directory so compaction parallelizes and commits
-    independently."""
+    dataset (one directory, or a LIST of append-only shard directories)
+    into ~``target_file_mb`` files sized from the ACTUAL on-disk bytes
+    (not a guessed partition count). Returns the file count written. At
+    scale, run per partition-directory so compaction parallelizes and
+    commits independently."""
     import math
     import os
     from urllib.parse import urlsplit

@@ -8,17 +8,18 @@ explodes to one row per record, carrying the ingest provenance columns
 (src_host/src_file/src_pid — the data the reference encodes into its
 Kafka key, KafkaJob.java:47).
 
-Implementation: SQL ``xpath_*`` functions (JVM expressions, codegen'd)
-— arrays per field, zipped positionally. This avoids from_xml's
-per-field null quirks across records and keeps everything columnar.
+Implementation: each <AuditRecord> chunk is regex-extracted and parsed
+once by Spark 4's native ``from_xml`` against an explicit per-record
+schema (one JVM expression per record), then every field is cast to its
+type. Element text is kept verbatim: Oracle writes bind values as
+``" #1(6):…"``, and the leading space is part of the value.
 """
-
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# field name -> (xpath leaf, spark type)
+# field name -> (XML element, spark type)
 AUDIT_FIELDS: dict[str, tuple[str, str]] = {
     "audit_type": ("Audit_Type", "int"),
     "session_id": ("Session_Id", "long"),
@@ -46,53 +47,29 @@ AUDIT_FIELDS: dict[str, tuple[str, str]] = {
 # residual newlines (ingest has already newline-stripped).
 _RECORD_RE = r"(?s)<AuditRecord[^>]*>.*?</AuditRecord>"
 
+# Every field reads as STRING first: from_xml yields '' for an empty
+# (present-but-valueless) element and NULL for an absent one; one
+# nullif-then-cast on EVERY field lands both on NULL, for strings and
+# numerics alike.
+_XML_SCHEMA = ", ".join(
+    f"{leaf} string" for leaf, _ in AUDIT_FIELDS.values()
+)
+
 
 def parse_audit_records(df: DataFrame, value_col: str = "value") -> DataFrame:
     """Explode whole-file audit documents into one typed row per
     <AuditRecord>, preserving all other (provenance) columns.
 
-    Each record chunk is regex-extracted (well-formed on its own) and its
-    fields read with xpath_string — a scalar JVM expression per field.
-    Absent elements yield '' -> NULL via nullif before the typed cast."""
+    Absent and empty elements yield NULL; other element text is kept
+    verbatim, surrounding whitespace included."""
     records = F.regexp_extract_all(value_col, F.lit(_RECORD_RE), 0)
     passthrough = [c for c in df.columns if c != value_col]
     exploded = df.select(*passthrough, F.explode(records).alias("_rec"))
-    typed = [
-        F.nullif(
-            F.expr(f"xpath_string(_rec, 'AuditRecord/{leaf}')"), F.lit("")
-        )
-        .cast(dtype)
-        .alias(name)
-        for name, (leaf, dtype) in AUDIT_FIELDS.items()
-    ]
-    return exploded.select(*passthrough, *typed)
-
-
-# Spark 4's native XML path — the same record chunks parsed by
-# from_xml against an explicit per-record schema instead of per-field
-# xpath. Kept as a first-class twin (equivalence-tested) so callers on
-# Spark >= 4 can pick either: from_xml is one expression per record
-# (vs one per field) and benefits from schema pruning, while xpath_*
-# sidesteps from_xml's permissive-mode null quirks; the equivalence
-# test is what makes that a choice instead of a risk.
-# Every field reads as STRING first: from_xml yields '' for an empty
-# (present-but-valueless) element where xpath_string also yields '' —
-# only an identical nullif-then-cast on EVERY field makes '' and
-# absent both land NULL on both parsers (an int-typed from_xml field
-# would hide the divergence for numerics but not strings).
-_XML_SCHEMA = ", ".join(
-    f"{leaf} string" for _, (leaf, _) in AUDIT_FIELDS.items()
-)
-
-
-def parse_audit_records_xml(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """from_xml twin of :func:`parse_audit_records` — identical output
-    schema and values (asserted in tests/test_audit_analytics.py)."""
-    records = F.regexp_extract_all(value_col, F.lit(_RECORD_RE), 0)
-    passthrough = [c for c in df.columns if c != value_col]
-    exploded = df.select(*passthrough, F.explode(records).alias("_rec"))
+    # from_xml trims element text by default, which would strip the
+    # leading space of Oracle's " #1(6):…" bind values
     parsed = exploded.withColumn(
-        "_p", F.from_xml("_rec", _XML_SCHEMA)
+        "_p",
+        F.from_xml("_rec", _XML_SCHEMA, {"ignoreSurroundingSpaces": "false"}),
     )
     typed = [
         F.nullif(F.col(f"_p.{leaf}"), F.lit("")).cast(dtype).alias(name)

@@ -19,8 +19,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # Plan cache: spark.read.parquet costs ~100 ms of driver time per call
 # (file listing + footer schema read). DataFrames are immutable logical

@@ -25,25 +25,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-class FakeGroupState:
-    """Minimal GroupState stand-in for driving stateful monitor
-    functions directly (the applyInPandasWithState fns in
-    streaming/analytics.py) without a streaming query."""
-
-    def __init__(self, value=None):
-        self._v = value
-        self.updated = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.updated = True

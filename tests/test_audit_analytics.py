@@ -123,17 +123,14 @@ def test_enrich_with_dimension(spark, audit_events):
     }
 
 
-def test_from_xml_twin_equals_xpath_parser(spark, tmp_path):
-    """parse_audit_records_xml (Spark 4 native from_xml) must produce
-    the identical typed frame as the xpath parser — including NULLs for
-    absent elements and the timestamp cast."""
+def test_parse_keeps_text_verbatim_and_nulls_absent_or_empty(spark, tmp_path):
+    """parse_audit_records on sparse and empty-element records: absent
+    and empty elements give NULL for strings and numerics alike, while
+    element text keeps its surrounding whitespace (Oracle's bind values
+    start with a space)."""
     from oraaud_kafka_spark.sources.audit_xml import (
         complete_only,
         read_audit_batch,
-    )
-    from oraaud_kafka_spark.streaming.audit_parse import (
-        parse_audit_records,
-        parse_audit_records_xml,
     )
 
     d = tmp_path / "adump"
@@ -141,17 +138,38 @@ def test_from_xml_twin_equals_xpath_parser(spark, tmp_path):
     recs = [
         RECORD.format(sid=1, eid=0, minute=5, user="SCOTT", host=0,
                       action=100, rc=0, scn=1, sql="select 1"),
-        # sparse record: most elements absent -> NULL in both parsers
-        " <AuditRecord>\n  <DB_User>HR</DB_User>\n </AuditRecord>",
-        # empty (present-but-valueless) elements -> NULL in both parsers,
-        # for strings AND numerics
+        # sparse record: most elements absent
+        " <AuditRecord>\n  <DB_User>HR</DB_User>\n  <EntryId>1</EntryId>\n"
+        " </AuditRecord>",
+        # empty (present-but-valueless) elements
         (" <AuditRecord>\n  <DB_User></DB_User>\n  <OS_User/>\n"
          "  <Action></Action>\n  <EntryId>7</EntryId>\n </AuditRecord>"),
+        # leading-space bind value and a whitespace-only user
+        (" <AuditRecord>\n  <DB_User>  </DB_User>\n  <EntryId>9</EntryId>\n"
+         "  <Sql_Bind> #1(6):100001</Sql_Bind>\n </AuditRecord>"),
     ]
     doc = '<?xml version="1.0"?>\n<Audit>\n' + "\n".join(recs) + "\n</Audit>"
     (d / "orcl_ora_1234_0001.xml").write_text(doc)
-    raw = complete_only(read_audit_batch(spark, str(d), hostname="twin"))
-    a = parse_audit_records(raw).orderBy("entry_id").toPandas()
-    b = parse_audit_records_xml(raw).orderBy("entry_id").toPandas()
-    assert list(a.columns) == list(b.columns)
-    assert a.equals(b), (a.compare(b) if a.shape == b.shape else (a, b))
+    raw = complete_only(read_audit_batch(spark, str(d), hostname="h"))
+    rows = {r.entry_id: r for r in parse_audit_records(raw).collect()}
+    assert sorted(rows) == [0, 1, 7, 9]
+
+    full = rows[0]
+    assert (full.session_id, full.db_user, full.action, full.sql_text) == (
+        1, "SCOTT", 100, "select 1"
+    )
+    assert str(full.event_ts).startswith("2024-05-04")
+    assert full.sql_binds is None and full.terminal is None
+
+    sparse = rows[1]
+    assert sparse.db_user == "HR"
+    assert sparse.session_id is None and sparse.action is None
+    assert sparse.os_user is None and sparse.event_ts is None
+
+    empty = rows[7]
+    assert empty.db_user is None and empty.os_user is None
+    assert empty.action is None
+
+    spaced = rows[9]
+    assert spaced.sql_binds == " #1(6):100001"
+    assert spaced.db_user == "  "

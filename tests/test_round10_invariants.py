@@ -167,155 +167,6 @@ def test_exact_ntile_fewer_rows_than_tiles(spark):
     assert got.values.tolist() == [[1, 1], [2, 2], [3, 3]]
 
 
-class _FakeState:
-    """Minimal GroupState stand-in for driving _burst_fn directly."""
-
-    def __init__(self, value=None):
-        self._v = value
-        self.updated = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.updated = True
-
-
-def _burst_batch(hours_counts):
-    import pandas as pd
-
-    ts = []
-    for h, c in hours_counts:
-        ts.extend([pd.Timestamp(h * 3600, unit="s")] * c)
-    return [pd.DataFrame({"event_type": ["click"] * len(ts), "ts": ts})]
-
-
-def test_burst_monitor_baseline_spans_hour_gaps_like_batch_rows_frame():
-    """Observed-bucket retention (round-10 re-shape): a sparse stream
-    with hour gaps must still fill its 24-bucket baseline — the batch
-    twin's ROWS frame counts OBSERVED buckets, not wall hours. The
-    previous wall-hour horizon kept the ratio NULL forever here."""
-    from oraaud_kafka_spark.streaming.analytics import _burst_fn
-
-    # 24 observed quiet buckets spaced 3 hours apart, then a burst hour
-    state = _FakeState()
-    quiet = [(3 * i, 1) for i in range(24)]
-    out = list(_burst_fn(("click",), _burst_batch(quiet), state))
-    assert state.updated
-    burst = list(
-        _burst_fn(("click",), _burst_batch([(100, 3)]), state)
-    )
-    row = burst[0].iloc[0]
-    assert row["base_hours"] == 24
-    assert row["base_sum"] == 24
-    assert row["ratio"] == 3.0
-    assert row["is_burst"] == 1
-
-
-def test_burst_monitor_rejects_singleton_far_future_timestamp():
-    """A single corrupt far-future row must not evict the histogram or
-    poison the emitted bar; subsequent valid rows keep flowing
-    (round-9 ADVICE: one bad event used to silence the monitor for up
-    to 25 hours)."""
-    from oraaud_kafka_spark.streaming.analytics import (
-        BURST_MONITOR_MAX_AHEAD,
-        _burst_fn,
-    )
-
-    state = _FakeState()
-    list(_burst_fn(("click",), _burst_batch([(h, 1) for h in range(24)]), state))
-    # corrupt: one event a year ahead
-    out = list(
-        _burst_fn(
-            ("click",),
-            _burst_batch([(24 + 365 * 24, 1), (24, 3)]),
-            state,
-        )
-    )
-    row = out[0].iloc[0]
-    assert row["bar_hour_epoch"] == 24 * 3600  # corrupt bar never emitted
-    assert row["n_events"] == 3
-    assert row["base_hours"] == 24
-    assert row["is_burst"] == 1
-    hours, counts = state.get
-    assert max(hours) == 24  # corrupt bucket not retained
-    # a genuine post-outage resume (multiple events) IS accepted
-    far = 24 + BURST_MONITOR_MAX_AHEAD + 100
-    list(_burst_fn(("click",), _burst_batch([(far, 2)]), state))
-    hours, _ = state.get
-    assert max(hours) == far
-
-
-def test_burst_monitor_all_null_ts_first_batch_writes_no_state():
-    """An all-NULL-ts first batch must not persist empty state arrays
-    for the key (round-9 ADVICE)."""
-    import pandas as pd
-
-    from oraaud_kafka_spark.streaming.analytics import _burst_fn
-
-    state = _FakeState()
-    pdf = pd.DataFrame({"event_type": ["click"], "ts": [pd.NaT]})
-    out = list(_burst_fn(("click",), [pdf], state))
-    assert out == []
-    assert not state.updated
-
-
-def test_funnel_monitor_idle_timeout_evicts_and_rearms():
-    """The state-TTL lever: a timed-out group removes its slots and
-    emits nothing; with idle_timeout set, every update re-arms the
-    processing-time timeout."""
-    import pandas as pd
-
-    from oraaud_kafka_spark.streaming.analytics import _funnel_fn
-
-    class _TtlState(_FakeState):
-        def __init__(self, value=None, timed_out=False):
-            super().__init__(value)
-            self.hasTimedOut = timed_out
-            self.removed = False
-            self.timeout_set = None
-
-        def remove(self):
-            self._v = None
-            self.removed = True
-
-        def setTimeoutDuration(self, d):
-            self.timeout_set = d
-
-    # the wrapper parses the human-readable knob to int ms at build
-    # time (GroupState.setTimeoutDuration rejects strings) and the fold
-    # fn receives milliseconds
-    from oraaud_kafka_spark.streaming.analytics import duration_ms
-
-    ttl_ms = duration_ms("30 days")
-    assert ttl_ms == 30 * 86_400_000
-
-    # timed-out group: state dropped, nothing emitted
-    st = _TtlState(value=(1, None, None, None), timed_out=True)
-    out = list(_funnel_fn((7,), iter(()), st, idle_timeout=ttl_ms))
-    assert out == [] and st.removed
-
-    # live group: update re-arms the timeout
-    st = _TtlState()
-    pdf = pd.DataFrame(
-        {
-            "user_id": [7],
-            "ts": [pd.Timestamp("2026-01-01")],
-            "event_id": [1],
-            "event_type": ["signup"],
-        }
-    )
-    out = list(_funnel_fn((7,), [pdf], st, idle_timeout=ttl_ms))
-    assert out[0].iloc[0]["stage"] == 1
-    assert st.timeout_set == ttl_ms
-
-
 def test_zorder_write_quantile_bucketing(spark, tmp_path, sf_dir):
     """Round-10 re-shape: the Morton key's per-column normalization is
     approxQuantile bucketing (bounded driver collect), not a global

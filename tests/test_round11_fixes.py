@@ -6,19 +6,10 @@ the round-10 code:
   otherwise collapse into ONE bucket and the Morton key silently
   degenerates to the other column);
 - segmented_running_max's partition+superbucket combination resolves
-  its shared-lineage join unambiguously and matches the plain window;
-- the monitor state-TTL knob (funnel/quantile/drawdown): parsed to int
-  milliseconds at build time (GroupState.setTimeoutDuration rejects
-  the string form, SPARK-40437), evicts + re-arms on the fake-state
-  unit surface, survives the REAL applyInPandasWithState path, and a
-  real ProcessingTimeTimeout eviction restarts the key's series;
-- the stream-stream interval-join monitor recovers buffered join state
-  across a checkpoint restart.
+  its shared-lineage join unambiguously and matches the plain window.
 """
 
 from __future__ import annotations
-
-import pytest
 
 import os
 
@@ -143,325 +134,3 @@ def test_segmented_running_max_partition_with_superbucket(spark):
         .reset_index(drop=True)
     )
     assert got.equals(want)
-
-
-class _TtlFakeState:
-    """Minimal GroupState stand-in with the TTL surface, for driving
-    the monitor fold functions directly (the test_round10_invariants
-    pattern)."""
-
-    def __init__(self, value=None, timed_out=False):
-        self._v = value
-        self.updated = False
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.updated = True
-
-    def remove(self):
-        self._v = None
-        self.removed = True
-
-    def setTimeoutDuration(self, d):
-        self.timeout_set = d
-
-
-def test_quantile_monitor_idle_timeout_evicts_and_rearms():
-    """The state-TTL lever must be uniform across the monitor kit
-    (round-10 VERDICT #7): quantile_monitor's histogram state drops on
-    timeout and re-arms on every update."""
-    import pandas as pd
-
-    from oraaud_kafka_spark.streaming.analytics import (
-        _quantile_fn,
-        duration_ms,
-    )
-
-    ttl_ms = duration_ms("30 days")
-    st = _TtlFakeState(value=([100], [3]), timed_out=True)
-    out = list(_quantile_fn(("click",), iter(()), st, idle_timeout=ttl_ms))
-    assert out == [] and st.removed
-
-    st = _TtlFakeState()
-    pdf = pd.DataFrame({"event_type": ["click"] * 2, "value": [1.0, 2.0]})
-    out = list(_quantile_fn(("click",), [pdf], st, idle_timeout=ttl_ms))
-    assert out[0].iloc[0]["n_events"] == 2
-    assert st.timeout_set == ttl_ms
-
-
-def test_drawdown_monitor_idle_timeout_evicts_and_rearms():
-    import pandas as pd
-
-    from oraaud_kafka_spark.streaming.analytics import (
-        _drawdown_fn,
-        duration_ms,
-    )
-
-    ttl_ms = duration_ms("30 days")
-    st = _TtlFakeState(value=(500, 100, 7), timed_out=True)
-    out = list(_drawdown_fn(("click",), iter(()), st, idle_timeout=ttl_ms))
-    assert out == [] and st.removed
-
-    st = _TtlFakeState()
-    pdf = pd.DataFrame(
-        {
-            "event_type": ["click"] * 2,
-            "ts": [pd.Timestamp("2026-01-01"), pd.Timestamp("2026-01-02")],
-            "event_id": [1, 2],
-            "value": [5.0, 3.0],
-        }
-    )
-    out = list(_drawdown_fn(("click",), [pdf], st, idle_timeout=ttl_ms))
-    assert out[0].iloc[0]["max_drawdown_dollars"] == 2.0
-    assert st.timeout_set == ttl_ms
-
-
-def test_duration_ms_parses_and_rejects():
-    """The one shared TTL parser: GroupState.setTimeoutDuration takes
-    ONLY int ms (the CalendarInterval string form raises,
-    SPARK-40437), so every monitor converts at build time — and a bad
-    knob must fail the BUILD, not the first micro-batch."""
-    import pytest
-
-    from oraaud_kafka_spark.streaming.analytics import duration_ms
-
-    assert duration_ms("30 days") == 30 * 86_400_000
-    assert duration_ms("1 hour") == 3_600_000
-    assert duration_ms("90 seconds") == 90_000
-    assert duration_ms("250 ms") == 250
-    assert duration_ms(1234) == 1234
-    for bad in ("soon", "3 fortnights", "0 days", "-5 minutes", 0, -1, True):
-        with pytest.raises((ValueError, TypeError)):
-            v = duration_ms(bad)
-            raise TypeError(f"accepted {bad!r} -> {v}")
-
-
-@pytest.mark.slow  # ~6 min of real-time stream waits (opt-in lane)
-def test_monitor_idle_timeout_runs_through_real_stream(spark, tmp_path):
-    """The TTL path through a REAL applyInPandasWithState run: with
-    idle_timeout set, the first micro-batch calls
-    state.setTimeoutDuration — which rejects strings — so this drives
-    each monitor end-to-end and checks normal output (the fake-state
-    unit tests above cannot catch an argument-type mismatch against
-    the actual GroupState API)."""
-    import json
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from oraaud_kafka_spark.streaming.analytics import (
-        drawdown_monitor,
-        funnel_monitor,
-        quantile_monitor,
-    )
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    d = tmp_path / "ttl_events"
-    d.mkdir()
-    rows = [
-        {"event_id": i, "ts": f"2024-05-04 10:0{i}:00", "user_id": 7,
-         "event_type": t, "value": float(10 - i)}
-        for i, t in enumerate(["signup", "view", "click", "purchase"])
-    ]
-    (d / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:2]))
-    (d / "b.json").write_text("\n".join(json.dumps(r) for r in rows[2:]))
-    for name, build in (
-        ("ttl_funnel", lambda s: funnel_monitor(s, idle_timeout="30 days")),
-        ("ttl_quant", lambda s: quantile_monitor(s, idle_timeout="30 days")),
-        ("ttl_dd", lambda s: drawdown_monitor(s, idle_timeout="30 days")),
-    ):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(d))
-        )
-        q = (
-            build(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-        assert spark.table(name).count() > 0, name
-
-
-def test_interval_monitor_join_state_survives_checkpoint_restart(
-    spark, tmp_path
-):
-    """Stream-stream join durability: a click buffered in join state
-    before a shutdown must still match a purchase that only arrives
-    after the restart — state-store recovery, not recomputation."""
-    import json
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from oraaud_kafka_spark.streaming.analytics import (
-        interval_latency_monitor,
-    )
-
-    schema = StructType(
-        [StructField("user_id", LongType()), StructField("ts_us", LongType())]
-    )
-    base_us = 1_714_816_800_000_000  # 2024-05-04 10:00:00 UTC
-    cdir, pdir = tmp_path / "c", tmp_path / "p"
-    cdir.mkdir(), pdir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    (cdir / "b1.json").write_text(
-        json.dumps({"user_id": 1, "ts_us": base_us})
-    )
-    (pdir / "b1.json").write_text(
-        json.dumps({"user_id": -2, "ts_us": base_us})
-    )
-
-    emitted: list = []
-
-    def run_once():
-        def collect(batch_df, batch_id):
-            emitted.extend(batch_df.collect())
-
-        def side(d):
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .json(str(d))
-                .select("user_id", F.timestamp_micros("ts_us").alias("ts"))
-            )
-
-        q = (
-            interval_latency_monitor(side(cdir), side(pdir), delay="1 hour")
-            .writeStream.foreachBatch(collect)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    run_once()
-    assert emitted == []  # click buffered, nothing matched yet
-
-    # while the query is down: the matching purchase + watermark
-    # sentinels far enough ahead to close the click's window
-    (pdir / "b2.json").write_text(
-        json.dumps({"user_id": 1, "ts_us": base_us + 300_000_000})  # +5 min
-    )
-    far = base_us + 10 * 3_600_000_000
-    (cdir / "b2.json").write_text(json.dumps({"user_id": -1, "ts_us": far}))
-    (cdir / "b3.json").write_text(
-        json.dumps({"user_id": -1, "ts_us": far + 3_600_000_000})
-    )
-    (pdir / "b3.json").write_text(
-        json.dumps({"user_id": -2, "ts_us": far + 3_600_000_000})
-    )
-    run_once()
-    rows = [r for r in emitted if r.n_pairs]
-    assert len(rows) == 1
-    assert rows[0].n_pairs == 1 and rows[0].sum_lag_us == 300_000_000
-
-
-@pytest.mark.slow  # ~4 min of real ProcessingTimeTimeout waits
-def test_monitor_idle_timeout_really_evicts_across_restarts(spark, tmp_path):
-    """The TTL eviction path through a REAL ProcessingTimeTimeout: a
-    key idle past a 1-second timeout is evicted when a later batch
-    runs, so its series restarts from scratch (n_events resets) — the
-    hasTimedOut branch executing in the actual state machinery, not a
-    fake state object."""
-    import json
-    import time
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from oraaud_kafka_spark.streaming.analytics import drawdown_monitor
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    d = tmp_path / "ttl_evict"
-    d.mkdir()
-    ckpt = str(tmp_path / "ckpt_ttl")
-    emitted: list = []
-
-    def run_once():
-        def collect(batch_df, batch_id):
-            emitted.extend(batch_df.collect())
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(d))
-        )
-        q = (
-            drawdown_monitor(stream, idle_timeout="1 second")
-            .writeStream.foreachBatch(collect)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    (d / "b1.json").write_text(
-        json.dumps(
-            {"event_id": 1, "ts": "2024-05-04 10:00:00", "event_type": "click",
-             "value": 9.0}
-        )
-    )
-    run_once()
-    assert [r.n_events for r in emitted] == [1]
-
-    time.sleep(2)  # let the 1s processing-time TTL expire while down
-    (d / "b2.json").write_text(
-        json.dumps(
-            {"event_id": 2, "ts": "2024-05-04 10:01:00", "event_type": "click",
-             "value": 4.0}
-        )
-    )
-    run_once()
-    last = emitted[-1]
-    # evicted: the series restarted, so n=1 again and NO drawdown from
-    # the pre-eviction peak of 9.0 (a surviving state would report n=2,
-    # max_drawdown 5.0)
-    assert last.n_events == 1
-    assert last.max_drawdown_dollars == 0.0
