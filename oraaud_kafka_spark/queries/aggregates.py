@@ -46,7 +46,7 @@ def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mixing count_distinct with the plain aggregates in ONE agg plans
     # a two-phase aggregate KEYED ON the near-unique l_orderkey — every
     # decimal/min/max buffer rides the 600k-key shuffle before the
-    # final 1-row reduce (plan pair in plans/r15). Splitting into a
+    # final 1-row reduce (PLANS.md has the split plan). Splitting into a
     # dedup-then-count leg (narrow: one long per row) plus a plain
     # stats leg (partial-aggregated to ONE row per map task) measured
     # 1.10 s -> 0.49 s at sf0.1. count("l_orderkey") over the distinct

@@ -1267,9 +1267,7 @@ def _exact_ntile_multi(
     # NULLS LAST: DuckDB's ntile default, see operators/bucketing.py
     bkt = None
     for a, _ in dims:
-        expr = boundary_bucket(
-            F.col("vd"), bounds.get(a, []), nulls_last=True
-        )
+        expr = boundary_bucket(F.col("vd"), bounds.get(a, []))
         bkt = (
             expr
             if bkt is None

@@ -17,8 +17,8 @@ Reference semantics -> Spark mapping:
   is_complete filter (trailing spaces, tabs and line breaks ignored);
   incomplete files are withheld from the sink. They are NOT retried:
   the file source logs every listed file as seen, so a later
-  re-listing skips them, and ``cleanSource`` deletes or archives them
-  after the batch commits like any other listed file. The reference
+  re-listing skips them, and ``cleanSource`` deletes them after the
+  batch commits like any other listed file. The reference
   requeues them instead (KafkaJob.java:81-88); that gap is open.
 - locked-writer gate (R-6, OpenFilesIntf strategies): Spark's contract is
   immutable-once-visible files; the trigger interval plus the
@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 # OraTrcNameHolder.java:34-35 — pid is the token before the last '_'.
 PID_PATTERN = r"_([0-9]+)_[^_/]*\.xml$"
-COMPLETE_PATTERN = r"</Audit>\s*$"
 
 
 def driver_hostname() -> str:
@@ -78,13 +77,12 @@ def read_audit_stream(
     hostname: str | None = None,
     max_files_per_trigger: int | None = None,
     clean_source: str | None = None,
-    archive_dir: str | None = None,
 ) -> DataFrame:
     """Streaming whole-file source over an audit directory.
 
     ``clean_source='delete'`` reproduces R-15 (delete after the batch
     commits — the reference deletes after the producer ack,
-    KafkaJob.java:71); 'archive' moves to ``archive_dir`` instead.
+    KafkaJob.java:71).
     """
     reader = (
         spark.readStream.format("text")
@@ -95,8 +93,6 @@ def read_audit_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if clean_source:
         reader = reader.option("cleanSource", clean_source)
-        if clean_source == "archive" and archive_dir:
-            reader = reader.option("sourceArchiveDir", archive_dir)
     return _decorate(reader.load(watched_path), hostname)
 
 
@@ -118,8 +114,3 @@ def complete_only(df: DataFrame) -> DataFrame:
     retried: the file source never lists them again, and ``cleanSource``
     consumes them with their batch."""
     return df.filter(F.col("is_complete"))
-
-
-def rejects(df: DataFrame) -> DataFrame:
-    """R-4 side-channel: records withheld by the completeness gate."""
-    return df.filter(~F.col("is_complete"))

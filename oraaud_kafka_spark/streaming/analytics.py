@@ -36,29 +36,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    df: DataFrame, ts_col: str, width: str, slide: str, *, delay: str = "10 minutes"
-) -> DataFrame:
-    return (
-        with_event_time(df, ts_col, delay)
-        .groupBy(F.window(ts_col, width, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("w.start", "w.end", "n")
-    )
-
-
-def session_counts(
-    df: DataFrame, ts_col: str, gap: str, keys: list[str], *, delay: str = "10 minutes"
-) -> DataFrame:
-    """Session windows: gap-based, state merges as events arrive."""
-    return (
-        with_event_time(df, ts_col, delay)
-        .groupBy(*keys, F.session_window(ts_col, gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(*keys, "w.start", "w.end", "n")
-    )
-
-
 def streaming_dedup(
     df: DataFrame, keys: list[str], *, ts_col: str | None = None, delay: str = "10 minutes"
 ) -> DataFrame:

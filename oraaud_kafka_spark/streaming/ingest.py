@@ -6,8 +6,8 @@ One streaming query replaces the reference's four thread pools:
   readStream(text, wholetext, pathGlobFilter=*.xml)     R-1/R-2/R-3
     -> derive key/pid/host columns                      R-5/R-9
     -> filter is_complete                               R-10 (+R-6 analog)
-    -> sink (kafka | foreachBatch kinesis | memory)     R-13/R-14
-  with trigger(processingTime=...)                      R-7
+    -> sink (kafka | foreachBatch kinesis)              R-13/R-14
+  with trigger(processingTime=... | availableNow)       R-7
   checkpoint + cleanSource=delete                       R-15 at-least-once
   observe() metrics + StreamingQueryListener            R-16
 
@@ -75,7 +75,6 @@ def kafka_sink_options(
     bootstrap_servers: str,
     topic: str,
     checkpoint_dir: str,
-    compression: str = "gzip",
     kafka_options: dict | None = None,
 ) -> dict[str, str]:
     """The full option map the Kafka sink runs with — pure so the
@@ -84,17 +83,30 @@ def kafka_sink_options(
     through ``kafka.``-prefixed (prefix added when missing, matching how
     the reference forwards every ``a2.kafka.*`` property verbatim into
     ProducerConfig); ``topic`` and ``checkpointLocation`` are sink-level
-    options and stay unprefixed."""
+    options and stay unprefixed. Compression defaults to gzip
+    (KafkaSingleton.java:108-114); ``compression.type`` in
+    ``kafka_options`` overrides it."""
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,
         "topic": topic,
-        "kafka.compression.type": compression,
+        "kafka.compression.type": "gzip",
         "checkpointLocation": checkpoint_dir,
     }
     for k, v in (kafka_options or {}).items():
         key = k if k.startswith("kafka.") else f"kafka.{k}"
         opts[key] = str(v)
     return opts
+
+
+def _start(writer, trigger: str | None, available_now: bool) -> StreamingQuery:
+    """Start a sink on the query's trigger: availableNow drains what is
+    listed and stops (``--once``); otherwise the processing-time trigger
+    is the reference's lock-poll interval (R-7)."""
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger:
+        writer = writer.trigger(processingTime=trigger)
+    return writer.start()
 
 
 def start_kafka_sink(
@@ -104,7 +116,7 @@ def start_kafka_sink(
     topic: str,
     checkpoint_dir: str,
     trigger: str = DEFAULT_TRIGGER,
-    compression: str = "gzip",
+    available_now: bool = False,
     kafka_options: dict | None = None,
 ) -> StreamingQuery:
     """R-13. Every ``a2.kafka.*`` tunable of the reference
@@ -121,19 +133,47 @@ def start_kafka_sink(
                 bootstrap_servers=bootstrap_servers,
                 topic=topic,
                 checkpoint_dir=checkpoint_dir,
-                compression=compression,
                 kafka_options=kafka_options,
             )
         )
-        .trigger(processingTime=trigger)
     )
-    return writer.start()
+    return _start(writer, trigger, available_now)
+
+
+def _kinesis_client(
+    region: str,
+    *,
+    access_key: str | None = None,
+    secret_key: str | None = None,
+    max_connections: int = 1,
+    request_timeout_ms: int = 30000,
+):
+    """The boto3 Kinesis client the writer builds per executor
+    partition, signed with the configured ``a2.kinesis.access.*`` keys
+    (KinesisSingleton.java:70-157); boto3's default credential chain
+    applies only when they are unset."""
+    import boto3
+    from botocore.config import Config
+
+    return boto3.client(
+        "kinesis",
+        region_name=region,
+        aws_access_key_id=access_key,
+        aws_secret_access_key=secret_key,
+        config=Config(
+            max_pool_connections=max_connections,
+            connect_timeout=request_timeout_ms / 1000.0,
+            read_timeout=request_timeout_ms / 1000.0,
+        ),
+    )
 
 
 def kinesis_batch_writer(
     stream_name: str,
     region: str,
     *,
+    access_key: str | None = None,
+    secret_key: str | None = None,
     gzip_threshold: int = DEFAULT_THRESHOLD,
     client_factory: Callable | None = None,
     put_batch_size: int = 500,
@@ -146,8 +186,8 @@ def kinesis_batch_writer(
     """R-14: Kinesis has no built-in Spark sink — ship each micro-batch
     with put_records from foreachBatch. Payloads gzip above the
     threshold (KinesisJob.java:66-73). ``client_factory`` lets tests
-    inject a fake client; the default needs boto3 (import-gated: not in
-    this container).
+    inject a fake client; the default is a boto3 client per executor
+    partition, signed with ``access_key``/``secret_key``.
 
     The reference's KPL tunables (KinesisSingleton.java:106-142) map to
     their batched-put equivalents: ``max_connections`` -> botocore
@@ -254,26 +294,16 @@ def kinesis_batch_writer(
             put_rows(client_factory(), payloads.toLocalIterator())
             return
 
-        def put_partition(rows):  # pragma: no cover - boto3 absent here
+        def put_partition(rows):  # pragma: no cover - needs a live stream
             # one client per executor partition — puts scale with the
             # cluster instead of funnelling every record through the
             # driver
-            try:
-                import boto3
-                from botocore.config import Config
-            except ImportError as e:
-                raise NotImplementedError(
-                    "Kinesis sink needs boto3 (not in this container); "
-                    "pass client_factory to inject a client"
-                ) from e
-            client = boto3.client(
-                "kinesis",
-                region_name=region,
-                config=Config(
-                    max_pool_connections=max_connections,
-                    connect_timeout=request_timeout_ms / 1000.0,
-                    read_timeout=request_timeout_ms / 1000.0,
-                ),
+            client = _kinesis_client(
+                region,
+                access_key=access_key,
+                secret_key=secret_key,
+                max_connections=max_connections,
+                request_timeout_ms=request_timeout_ms,
             )
             put_rows(client, rows)
 
@@ -293,78 +323,7 @@ def start_foreach_batch_sink(
     writer = df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    return writer.start()
-
-
-def start_dual_sink(
-    spark_df: DataFrame,
-    main_write: Callable[[DataFrame, int], None],
-    *,
-    reject_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    trigger: str | None = DEFAULT_TRIGGER,
-) -> StreamingQuery:
-    """R-4 side-channel in-stream: each micro-batch routes complete
-    records to ``main_write`` and withheld (incomplete) records to a
-    reject parquet dir — the reference logs these (OraaudKafka.java:
-    118-119); persisting them is the auditable upgrade. One pass over
-    the batch; the batch DataFrame is persisted so the two sinks don't
-    recompute the source."""
-    from ..sources.audit_xml import complete_only, rejects
-
-    def route(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            main_write(complete_only(batch_df), batch_id)
-            rejected = rejects(batch_df).select("key", "src_file", "src_pid")
-            if rejected.take(1):
-                rejected.write.mode("append").parquet(reject_dir)
-        finally:
-            batch_df.unpersist()
-
-    writer = spark_df.writeStream.foreachBatch(route).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    return writer.start()
-
-
-def idempotent_parquet_writer(base_dir: str):
-    """Exactly-once file output over an at-least-once stream: each
-    micro-batch OVERWRITES its own ``batch_id=<n>`` directory, so a
-    batch replayed after a failure (foreachBatch's documented
-    at-least-once contract) rewrites the same files instead of
-    appending duplicates. Downstream readers see exactly-once data;
-    the batch id in the path doubles as the commit marker. This is the
-    standard idempotent-sink pattern for sinks without transactions
-    (reference parallel: the ack-then-delete commit in KafkaJob.java
-    60-94 makes redelivery, not duplication, the failure mode).
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{base_dir}/batch_id={batch_id}"
-        )
-
-    return write_batch
-
-
-def start_memory_sink(
-    df: DataFrame, query_name: str, *, available_now: bool = True
-) -> StreamingQuery:
-    """In-process sink for tests and local inspection."""
-    writer = df.writeStream.format("memory").queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer, trigger, available_now)
 
 
 def run_from_config(
@@ -391,11 +350,14 @@ def run_from_config(
             topic=cfg.kafka_topic,
             checkpoint_dir=checkpoint_dir,
             trigger=cfg.trigger,
+            available_now=available_now,
             kafka_options=cfg.kafka_options,
         )
     write_batch = kinesis_batch_writer(
         cfg.kinesis_stream,
         cfg.kinesis_region,
+        access_key=cfg.kinesis_access_key,
+        secret_key=cfg.kinesis_access_secret,
         gzip_threshold=cfg.kinesis_gzip_threshold,
         client_factory=client_factory,
         max_connections=cfg.kinesis_max_connections,
@@ -406,7 +368,7 @@ def run_from_config(
         df,
         write_batch,
         checkpoint_dir=checkpoint_dir,
-        trigger=None if available_now else cfg.trigger,
+        trigger=cfg.trigger,
         available_now=available_now,
     )
 

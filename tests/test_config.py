@@ -157,3 +157,72 @@ a2.kinesis.access.secret = SK
     assert stream_name == "s"
     assert len(records) == 1
     assert records[0]["PartitionKey"].endswith("orcl_ora_77_0001.xml")
+
+
+@pytest.mark.parametrize(
+    "once, trigger",
+    [(True, {"availableNow": True}), (False, {"processingTime": "512 milliseconds"})],
+)
+def test_run_from_config_kafka_trigger(spark, tmp_path, monkeypatch, once, trigger):
+    """``--once`` drains the backlog and exits on either broker: the
+    Kafka sink starts on an availableNow trigger, and otherwise on the
+    lock-poll interval. No connector JAR here, so the writer's trigger
+    and start are intercepted."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from oraaud_kafka_spark.streaming.ingest import run_from_config
+
+    triggers: list = []
+    monkeypatch.setattr(
+        DataStreamWriter, "trigger", lambda self, **kw: triggers.append(kw) or self
+    )
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **kw: "started")
+    cfg = load_config(_kafka_conf(tmp_path))
+    q = run_from_config(
+        spark, cfg, checkpoint_dir=str(tmp_path / "ckpt"), available_now=once
+    )
+    assert q == "started"
+    assert triggers == [trigger]
+
+
+def test_run_from_config_signs_kinesis_client_with_configured_keys(
+    spark, tmp_path, monkeypatch
+):
+    """``a2.kinesis.access.key``/``.secret`` reach the default boto3
+    client instead of boto3 falling back to ambient credentials.
+    Building the client makes no network call."""
+    from oraaud_kafka_spark.streaming import ingest
+
+    cfg = load_config(
+        f"""
+a2.target.broker = kinesis
+a2.watched.path = {tmp_path}
+a2.kinesis.region = eu-west-1
+a2.kinesis.stream = s
+a2.kinesis.access.key = AK
+a2.kinesis.access.secret = SK
+a2.kinesis.max.connections = 4
+"""
+    )
+    seen: dict = {}
+    real_writer = ingest.kinesis_batch_writer
+
+    def spy(stream_name, region, **kw):
+        seen.update(kw, region=region)
+        return real_writer(stream_name, region, **kw)
+
+    monkeypatch.setattr(ingest, "kinesis_batch_writer", spy)
+    monkeypatch.setattr(ingest, "start_foreach_batch_sink", lambda *a, **kw: None)
+    ingest.run_from_config(spark, cfg, checkpoint_dir=str(tmp_path / "ckpt"))
+
+    client = ingest._kinesis_client(
+        seen["region"],
+        access_key=seen.get("access_key"),
+        secret_key=seen.get("secret_key"),
+        max_connections=seen["max_connections"],
+        request_timeout_ms=seen["request_timeout_ms"],
+    )
+    assert client.meta.region_name == "eu-west-1"
+    creds = client._request_signer._credentials
+    assert (creds.access_key, creds.secret_key) == ("AK", "SK")
+    assert client.meta.config.max_pool_connections == 4

@@ -11,19 +11,13 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from oraaud_kafka_spark.sources.audit_xml import (
-    COMPLETE_PATTERN,
-    complete_only,
-    read_audit_batch,
-    rejects,
-)
+from oraaud_kafka_spark.sources.audit_xml import complete_only, read_audit_batch
 from oraaud_kafka_spark.streaming.audit_parse import parse_audit_records
 from oraaud_kafka_spark.streaming.ingest import (
     IngestMetrics,
     build_ingest_stream,
     kinesis_batch_writer,
     start_foreach_batch_sink,
-    start_memory_sink,
 )
 
 AUDIT_DOC = """<?xml version="1.0" encoding="UTF-8"?>
@@ -81,8 +75,11 @@ def test_batch_decoration_semantics(spark, tmp_path):
     good = rows["orcl_ora_12345_0001.xml"]
     # R-8: newline-strip — whole file is one line
     assert "\n" not in good.value
-    # R-9: key = hostname:absolute_file (KafkaJob.java:47 format)
+    # R-9: key = hostname:src_file. src_file is input_file_name(), a
+    # file:// URI, so the key is host:file:///abs/path, not the
+    # reference's host:/abs/path (KafkaJob.java:47); ROADMAP open item
     assert good.key == f"testhost:{good.src_file}"
+    assert good.src_file.startswith("file:///")
     assert good.src_file.endswith("orcl_ora_12345_0001.xml")
     # R-5: pid parsed from *_<pid>_<ts>.xml
     assert good.src_pid == "12345"
@@ -91,7 +88,7 @@ def test_batch_decoration_semantics(spark, tmp_path):
     assert not rows["orcl_ora_12346_0002.xml"].is_complete
 
     shipped = complete_only(df)
-    withheld = rejects(df)
+    withheld = df.filter(~F.col("is_complete"))
     assert shipped.count() == 1
     assert withheld.count() == 1
 
@@ -120,6 +117,9 @@ def test_gate_ignores_trailing_line_breaks(spark, tmp_path):
 
 
 def test_streaming_ingest_memory_sink(spark, tmp_path):
+    """One availableNow pass into a collecting sink: R-10 (only the
+    complete file ships) and R-16 (IngestMetrics sees its files and
+    bytes)."""
     make_corpus(tmp_path)
     stream = build_ingest_stream(
         spark, str(tmp_path), hostname="testhost", clean_source=None
@@ -127,10 +127,15 @@ def test_streaming_ingest_memory_sink(spark, tmp_path):
     assert stream.isStreaming
     metrics = IngestMetrics()
     spark.streams.addListener(metrics)
+    out: list = []
     try:
-        q = start_memory_sink(stream, "ingest_capture")
+        q = start_foreach_batch_sink(
+            stream,
+            lambda batch_df, _: out.extend(batch_df.collect()),
+            checkpoint_dir=str(tmp_path / "_ckm"),
+            available_now=True,
+        )
         q.awaitTermination(60)
-        out = spark.sql("SELECT * FROM ingest_capture").collect()
         # only the complete file shipped; truncated + empty withheld
         assert len(out) == 1
         row = out[0]
@@ -294,37 +299,6 @@ def test_audit_parse_multirecord(spark, tmp_path):
     assert len(rows) == 100
     assert [r.session_id for r in rows] == list(range(100))
     assert rows[99].db_user == "U99"
-
-
-def test_dual_sink_reject_side_channel(spark, tmp_path):
-    """R-4: complete files reach the main sink, withheld files land in
-    the reject parquet dir with their provenance columns."""
-    from oraaud_kafka_spark.sources.audit_xml import read_audit_stream
-    from oraaud_kafka_spark.streaming.ingest import start_dual_sink
-
-    make_corpus(tmp_path)
-    shipped = []
-
-    def main_write(batch_df, batch_id):
-        shipped.extend(r.src_file for r in batch_df.select("src_file").collect())
-
-    reject_dir = str(tmp_path / "rejects")
-    df = read_audit_stream(spark, str(tmp_path), hostname="h")
-    q = start_dual_sink(
-        df,
-        main_write,
-        reject_dir=reject_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    q.stop()
-
-    assert [os.path.basename(f) for f in shipped] == ["orcl_ora_12345_0001.xml"]
-    rej = spark.read.parquet(reject_dir)
-    rows = rej.collect()
-    assert [os.path.basename(r.src_file) for r in rows] == ["orcl_ora_12346_0002.xml"]
-    assert rows[0].src_pid == "12346"
 
 
 def _payload_df(spark, n=4):
@@ -541,8 +515,9 @@ def test_kafka_sink_option_mapping():
 
 def test_kafka_sink_record_contract(spark, tmp_path):
     """R-13: the exact ProducerRecord projection start_kafka_sink ships
-    (kafka_records), driven through foreachBatch since no broker exists
-    in this container: key = host:absolute_file (KafkaJob.java:47),
+    (kafka_records), driven through foreachBatch so no broker is
+    needed: key = host:file URI (the reference's
+    host:absolute_file, KafkaJob.java:47, has no ``file://``),
     value = whole file with newlines stripped (KafkaJob.java:60-80),
     incomplete files never shipped."""
     from oraaud_kafka_spark.streaming.ingest import kafka_records
@@ -569,45 +544,3 @@ def test_kafka_sink_record_contract(spark, tmp_path):
     assert "\n" not in rec.value and "\r" not in rec.value
     assert rec.value.startswith("<?xml") and rec.value.endswith("</Audit>")
 
-
-def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
-    """Replaying a micro-batch (the at-least-once failure mode of
-    foreachBatch) must overwrite, not append — exactly-once output."""
-    from oraaud_kafka_spark.streaming.ingest import idempotent_parquet_writer
-
-    out = str(tmp_path / "out")
-    writer = idempotent_parquet_writer(out)
-    batch = spark.range(10).withColumnRenamed("id", "v")
-    writer(batch, 0)
-    writer(batch, 1)
-    assert spark.read.parquet(out).count() == 20
-    # simulate post-failure replay of batch 1
-    writer(batch, 1)
-    back = spark.read.parquet(out)
-    assert back.count() == 20
-    assert back.select("batch_id").distinct().count() == 2
-
-
-def test_idempotent_sink_under_streaming(spark, tmp_path):
-    from oraaud_kafka_spark.sources.audit_xml import read_audit_stream
-    from oraaud_kafka_spark.streaming.ingest import (
-        idempotent_parquet_writer,
-        start_foreach_batch_sink,
-    )
-
-    audit_dir = tmp_path / "audit"
-    audit_dir.mkdir()
-    (audit_dir / "host1_ora_123_1.xml").write_text(
-        _fix_ts(AUDIT_DOC.format(sid=9, eid=3, user="SYS"))
-    )
-    stream = read_audit_stream(spark, str(audit_dir))
-    q = start_foreach_batch_sink(
-        stream,
-        idempotent_parquet_writer(str(tmp_path / "sink")),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(60)
-    back = spark.read.parquet(str(tmp_path / "sink"))
-    assert back.count() == 1
-    assert "batch_id" in back.columns

@@ -7,7 +7,8 @@ classpath, e.g. ``--packages org.apache.spark:spark-sql-kafka-0-10_2.13``)
 and this test ships one audit file through the real pipeline and reads
 it back, asserting the full KafkaJob.java:43-94 contract:
 
-- key = ``hostname:absoluteFileName``        (KafkaJob.java:47)
+- key = ``hostname:`` + the file URI         (the reference's
+  ``hostname:absoluteFileName``, KafkaJob.java:47, lacks ``file://``)
 - value = whole file, newline-STRIPPED       (KafkaJob.java:49-57)
 - producer ships compression.type=gzip       (KafkaSingleton.java:97)
   — asserted on the sink's option map; the consumer API decompresses

@@ -1,6 +1,6 @@
 """Reusable operator library tests: as-of join (vs a naive reference
 computed in Python), salted skew join (identical multiset vs plain
-join), top-k helpers."""
+join)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from oraaud_kafka_spark.operators.asof import asof_join
 from oraaud_kafka_spark.operators.skew import salted_join
-from oraaud_kafka_spark.operators.topk import topk_global, topk_per_group
 from oraaud_kafka_spark.tables import load
 
 SF = "/root/testdata/sf0.001"
@@ -90,19 +89,6 @@ def test_salted_join_matches_plain_join(spark):
         .agg(F.count("*").alias("n"), F.sum("l_quantity").alias("q"))
     )
     assert sorted(plain.collect()) == sorted(salted.collect())
-
-
-def test_topk_helpers(spark):
-    c = load(spark, SF, "customer")
-    top5 = topk_global(c, [F.col("c_acctbal").desc(), F.col("c_custkey")], 5)
-    manual = c.orderBy(F.col("c_acctbal").desc(), "c_custkey").take(5)
-    assert top5.collect() == manual
-
-    per_seg = topk_per_group(
-        c, ["c_mktsegment"], [F.col("c_acctbal").desc(), F.col("c_custkey")], 3
-    )
-    rows = per_seg.groupBy("c_mktsegment").count().collect()
-    assert all(r["count"] == 3 for r in rows)
 
 
 def test_plan_report_counts(spark):

@@ -685,38 +685,6 @@ def test_bpe_apply_merge_matches_python_reference(spark):
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 65535), st.integers(0, 65535)),
-        min_size=1,
-        max_size=20,
-    )
-)
-@_slow
-def test_morton_interleave_matches_python_reference(spark, pairs):
-    """The JVM bit-spread Morton key must equal the classic pure-Python
-    bit interleave for any 16-bit inputs, and be monotone-preserving on
-    each axis when the other is fixed."""
-    from oraaud_kafka_spark.sources.tabular import _morton_interleave
-
-    def py_morton(a, b):
-        out = 0
-        for i in range(16):
-            out |= ((a >> i) & 1) << (2 * i)
-            out |= ((b >> i) & 1) << (2 * i + 1)
-        return out
-
-    df = spark.createDataFrame(pairs, "a long, b long")
-    got = {
-        (r.a, r.b): r.z
-        for r in df.select(
-            "a", "b", _morton_interleave(F.col("a"), F.col("b")).alias("z")
-        ).collect()
-    }
-    for a, b in pairs:
-        assert got[(a, b)] == py_morton(a, b), (a, b)
-
-
-@given(
-    st.lists(
         st.one_of(st.none(), st.integers(-5, 60)),
         min_size=1,
         max_size=25,

@@ -167,29 +167,6 @@ def test_exact_ntile_fewer_rows_than_tiles(spark):
     assert got.values.tolist() == [[1, 1], [2, 2], [3, 3]]
 
 
-def test_zorder_write_quantile_bucketing(spark, tmp_path, sf_dir):
-    """Round-10 re-shape: the Morton key's per-column normalization is
-    approxQuantile bucketing (bounded driver collect), not a global
-    percent_rank window. Asserts the boundaries come from one bounded
-    collect and the write round-trips; the footer-stats locality
-    property itself is already pinned by test_tabular_io.py::
-    test_zorder_write_narrows_both_columns_stats (not duplicated
-    here)."""
-    from oraaud_kafka_spark.sources import tabular
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    qs = [i / 256 for i in range(1, 256)]
-    bounds1, bounds2 = (
-        sorted(set(b))
-        for b in li.stat.approxQuantile(["l_orderkey", "l_partkey"], qs, 0.001)
-    )
-    assert bounds1 and bounds2  # <= 255 doubles per column on the driver
-    out = str(tmp_path / "zorder10")
-    tabular.zorder_write(li, out, ("l_orderkey", "l_partkey"), n_files=4)
-    written = spark.read.parquet(out)
-    assert written.count() == li.count()
-
-
 def test_late_data_segmented_scan_property(spark, tmp_path):
     """Property check over adversarial shapes the fixture can't cover:
     random sparse/duplicate/NULL event streams at several bucket
@@ -244,50 +221,3 @@ def test_late_data_segmented_scan_property(spark, tmp_path):
 
     check()
 
-
-def test_zorder_write_string_and_date_columns(spark, tmp_path, sf_dir):
-    """The quantile path must keep the replaced percent_rank version's
-    type coverage: string and date z-order columns lay out without
-    crashing (review finding — approxQuantile alone rejects them),
-    and the per-file footer spans of the string column still narrow."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from oraaud_kafka_spark.sources.tabular import zorder_write
-
-    c = load(spark, sf_dir, "customer").select(
-        "c_name", "c_acctbal", "c_custkey"
-    )
-    o = load(spark, sf_dir, "orders").select("o_orderdate", "o_orderkey")
-    out_d = str(tmp_path / "zorder_date")
-    zorder_write(o, out_d, ("o_orderdate", "o_orderkey"), n_files=4)
-    assert spark.read.parquet(out_d).count() == o.count()
-    out = str(tmp_path / "zorder_str")
-    zorder_write(c, out, ("c_name", "c_acctbal"), n_files=4)
-    spans = []
-    glob_lo = glob_hi = None
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(out, f)).metadata
-        idx = md.schema.to_arrow_schema().get_field_index("c_name")
-        st = md.row_group(0).column(idx).statistics
-        spans.append((st.min, st.max))
-        glob_lo = st.min if glob_lo is None else min(glob_lo, st.min)
-        glob_hi = st.max if glob_hi is None else max(glob_hi, st.max)
-    assert len(spans) >= 3
-    # at least one file's clerk range is a strict subrange of the table
-    assert any(lo > glob_lo or hi < glob_hi for lo, hi in spans)
-
-
-def test_zorder_write_rejects_unsupported_types(spark):
-    import pytest
-
-    from oraaud_kafka_spark.sources.tabular import zorder_write
-
-    df = spark.createDataFrame(
-        [(1, ["a"])], "id bigint, arr array<string>"
-    )
-    with pytest.raises(ValueError, match="unsupported type"):
-        zorder_write(df, "/tmp/never", ("id", "arr"))
