@@ -20,26 +20,41 @@ EXIT_CONFIG = 3
 EXIT_WATCHED_PATH = 4
 
 
+def _parse(argv: list[str]) -> tuple[str, str | None, bool] | None:
+    """(conf, checkpoint, once), or None when argv is not a valid
+    command line: an unknown flag, ``--checkpoint`` without a value, or
+    other than one configuration file."""
+    args, checkpoint, once = [], None, False
+    rest = iter(argv)
+    for a in rest:
+        if a == "--once":
+            once = True
+        elif a == "--checkpoint":
+            checkpoint = next(rest, None)
+            if checkpoint is None or checkpoint.startswith("--"):
+                return None
+        elif a.startswith("--"):
+            return None
+        else:
+            args.append(a)
+    return (args[0], checkpoint, once) if len(args) == 1 else None
+
+
 def main(argv: list[str]) -> int:
-    args = [a for a in argv if not a.startswith("--")]
-    opts = {a for a in argv if a.startswith("--")}
-    checkpoint = None
-    for i, a in enumerate(argv):
-        if a == "--checkpoint" and i + 1 < len(argv):
-            checkpoint = argv[i + 1]
-            args.remove(checkpoint)
-    if len(args) != 1:
+    parsed = _parse(argv)
+    if parsed is None:
         print(
             "Usage: python -m oraaud_kafka_spark <configuration file> "
             "[--checkpoint DIR] [--once]",
             file=sys.stderr,
         )
         return EXIT_USAGE
+    conf, checkpoint, once = parsed
 
     from .config import ConfigError, load_config
 
     try:
-        cfg = load_config(args[0])
+        cfg = load_config(conf)
     except ConfigError as e:
         msg = str(e)
         print(f"FATAL: {msg}\nExiting.", file=sys.stderr)
@@ -58,7 +73,7 @@ def main(argv: list[str]) -> int:
         spark,
         cfg,
         checkpoint_dir=checkpoint or f"{cfg.watched_path.rstrip('/')}/.checkpoint",
-        available_now="--once" in opts,
+        available_now=once,
     )
     try:
         query.awaitTermination()

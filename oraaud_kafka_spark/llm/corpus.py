@@ -314,9 +314,6 @@ def importance_scores(
     ).select("doc_id", "source", F.explode("toks").alias("tok")).select(
         "doc_id", "source", bucket_of.alias("bucket")
     )
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time bucket-stats scan: no plan memo
     is_target = F.col("source") == target_source
     stats_rows = (
         feats.groupBy("bucket")
@@ -568,9 +565,6 @@ FROM embeddings
 def q_emb_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pca import power_iteration_top_pc
 
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time dim probe + PCA loop: no plan memo
     e = load(spark, sf_dir, "embeddings")
     first = e.select("embedding").first()
     if first is None:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.triangle import triangle_self_join
+from ..queries import directional, dot, norm, sql_directional_cte, sql_dot, sql_norm
 from ..registry import query
 from ..tables import CAL_SLICE_K, cal_slice, load, materialize, spread, sql_cal_key
 
@@ -596,58 +597,15 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EMB_THRESHOLD = 0.35
 
-_EMB_DOT = (
-    "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-    "list_transform(list_zip({a}, {b}), "
-    "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))), (acc, x) -> acc + x)"
-)
-
-
-def _emb_sql_norm(a: str) -> str:
-    return (
-        f"sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
-        f"(acc, x) -> acc + x))"
-    )
-
-
-def _emb_directional_cte() -> str:
-    """Zero-norm vectors have no direction — excluded from embedding
-    dedup on BOTH engines (shadow CTE via main. qualifier on the oracle
-    side, the same norm filter Spark-side)."""
-    return (
-        "embeddings AS (SELECT * FROM main.embeddings WHERE "
-        + _emb_sql_norm("embedding")
-        + " > 0)"
-    )
-
-def _emb_directional(df: DataFrame) -> DataFrame:
-    """Spark twin of _emb_directional_cte: same norm-positive filter."""
-    return df.filter(
-        F.sqrt(
-            F.aggregate(
-                F.transform(
-                    "embedding", lambda x: x.cast("double") * x.cast("double")
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-        > 0
-    )
-
-
-
-
 _EMB_ORACLE = f"""
-WITH {_emb_directional_cte()}
+WITH {sql_directional_cte()}
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
-       {_EMB_DOT.format(a='a.embedding', b='b.embedding')}
-         / ({_emb_sql_norm('a.embedding')} * {_emb_sql_norm('b.embedding')}) AS cosine
+       {sql_dot('a.embedding', 'b.embedding')}
+         / ({sql_norm('a.embedding')} * {sql_norm('b.embedding')}) AS cosine
 FROM embeddings a JOIN embeddings b
   ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {_EMB_DOT.format(a='a.embedding', b='b.embedding')}
-        / ({_emb_sql_norm('a.embedding')} * {_emb_sql_norm('b.embedding')}) >= {_EMB_THRESHOLD}
+WHERE {sql_dot('a.embedding', 'b.embedding')}
+        / ({sql_norm('a.embedding')} * {sql_norm('b.embedding')}) >= {_EMB_THRESHOLD}
 ORDER BY vec_a, vec_b
 """
 
@@ -660,24 +618,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_embedding_lsh (SRP buckets + triangle decomposition) and
     q_dedup_semantic (SemDeDup quantizer clusters) — same pair-predicate
     discipline, honest candidate generation."""
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def norm(a):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    e = _emb_directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     a = spread(
         e.select(F.col("vec_id").alias("vec_a"), "label", F.col("embedding").alias("va"))
     )
@@ -710,7 +651,7 @@ _SRP_THRESHOLD = 0.35
 
 _SRP_BUCKET_SQL = f"""
   SELECT e.vec_id, e.embedding,
-         string_agg(CASE WHEN {_EMB_DOT.format(a='e.embedding', b='a.av')} >= 0
+         string_agg(CASE WHEN {sql_dot('e.embedding', 'a.av')} >= 0
                          THEN '1' ELSE '0' END, '' ORDER BY a.aid) AS bucket
   FROM embeddings e,
        (SELECT vec_id AS aid, embedding AS av FROM embeddings
@@ -719,15 +660,15 @@ _SRP_BUCKET_SQL = f"""
 """
 
 _EMB_LSH_ORACLE = f"""
-WITH {_emb_directional_cte()},
+WITH {sql_directional_cte()},
 bucketed AS ({_SRP_BUCKET_SQL})
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       {_EMB_DOT.format(a='a.embedding', b='b.embedding')}
-         / ({_emb_sql_norm('a.embedding')} * {_emb_sql_norm('b.embedding')}) AS cosine
+       {sql_dot('a.embedding', 'b.embedding')}
+         / ({sql_norm('a.embedding')} * {sql_norm('b.embedding')}) AS cosine
 FROM bucketed a JOIN bucketed b
   ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {_EMB_DOT.format(a='a.embedding', b='b.embedding')}
-        / ({_emb_sql_norm('a.embedding')} * {_emb_sql_norm('b.embedding')}) >= {_SRP_THRESHOLD}
+WHERE {sql_dot('a.embedding', 'b.embedding')}
+        / ({sql_norm('a.embedding')} * {sql_norm('b.embedding')}) >= {_SRP_THRESHOLD}
 ORDER BY vec_a, vec_b
 """
 
@@ -737,26 +678,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import _sql_dot_lit
     from ..operators.triangle import triangle_self_join
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def norm(a):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time anchor fetch: no plan memo
-    e = _emb_directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     anchors = [
         [float(x) for x in row[0]]
         for row in e.filter(F.col("vec_id") < _SRP_N_ANCHORS)
@@ -1227,8 +1149,8 @@ _SEM_ASSIGN_SQL = f"""
     SELECT e.vec_id, e.embedding, c.cid,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY {_EMB_DOT.format(a='e.embedding', b='c.cv')}
-                      / ({_emb_sql_norm('e.embedding')} * {_emb_sql_norm('c.cv')}) DESC,
+             ORDER BY {sql_dot('e.embedding', 'c.cv')}
+                      / ({sql_norm('e.embedding')} * {sql_norm('c.cv')}) DESC,
                       c.cid) AS crnk
     FROM embeddings e,
          (SELECT vec_id AS cid, embedding AS cv FROM embeddings
@@ -1237,14 +1159,14 @@ _SEM_ASSIGN_SQL = f"""
 """
 
 _SEM_ORACLE = f"""
-WITH {_emb_directional_cte()},
+WITH {sql_directional_cte()},
 assign AS ({_SEM_ASSIGN_SQL})
 SELECT a.vec_id, a.cid,
        EXISTS (
          SELECT 1 FROM assign b
          WHERE b.cid = a.cid AND b.vec_id < a.vec_id
-           AND {_EMB_DOT.format(a='a.embedding', b='b.embedding')}
-                 / ({_emb_sql_norm('a.embedding')} * {_emb_sql_norm('b.embedding')})
+           AND {sql_dot('a.embedding', 'b.embedding')}
+                 / ({sql_norm('a.embedding')} * {sql_norm('b.embedding')})
                >= {_SEM_THRESHOLD}
        ) AS dropped
 FROM assign a
@@ -1259,22 +1181,6 @@ def semantic_dedup(
     centroid frame -> (vec_id, cid, dropped). Reused by q_dedup_semantic
     and property-tested against a pure-Python reference on random
     vectors in tests/test_properties.py."""
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def norm(a):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
 
     # norms hoisted to per-row columns BEFORE the cross join (identical
     # doubles, K-fold less fold work in the assignment projection); the
@@ -1341,10 +1247,7 @@ def semantic_dedup(
 
 @query("q_dedup_semantic", oracle=_SEM_ORACLE)
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time count for K: no plan memo
-    e = _emb_directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     # K = ceil(sqrt(N)): one metadata-cheap count at plan-build keeps
     # cluster width ~sqrt(N) at any corpus size (the oracle computes the
     # identical K via a scalar subquery)

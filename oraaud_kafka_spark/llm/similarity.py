@@ -25,73 +25,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..queries import directional, dot, norm, sql_directional_cte, sql_dot, sql_norm
 from ..registry import query
 from ..tables import CAL_SLICE_K, cal_slice, load, spread, sql_cal_key
 
 N_QUERIES = 10
 TOP_K = 5
 
-# Sequential double-precision dot product, identical fold order in both
-# engines.
-_DOT_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-    "list_transform(list_zip({a}, {b}), "
-    "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))), (acc, x) -> acc + x)"
-)
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def _sql_dot(a: str, b: str) -> str:
-    return _DOT_SQL.format(a=a, b=b)
-
-
-def _sql_norm(a: str) -> str:
-    inner = (
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (acc, x) -> acc + x)"
-    )
-    return f"sqrt({inner})"
-
-
-# Zero-norm vectors have no direction; every similarity operator excludes
-# them identically on both engines. The oracle side prepends this CTE
-# (shadowing the base view via the main. qualifier); the Spark side
-# filters with the same norm expression after load.
-def _sql_directional_cte() -> str:
-    return (
-        "embeddings AS (SELECT * FROM main.embeddings WHERE "
-        + _sql_norm("embedding")
-        + " > 0)"
-    )
-
-
-def _directional(df):
-    return df.filter(_norm(F.col("embedding")) > 0)
-
-
 _BRUTE_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.qid, e.vec_id AS nid, e.label,
-         {_sql_dot('q.qv', 'e.embedding')} / ({_sql_norm('q.qv')} * {_sql_norm('e.embedding')}) AS cosine
+         {sql_dot('q.qv', 'e.embedding')} / ({sql_norm('q.qv')} * {sql_norm('e.embedding')}) AS cosine
   FROM q JOIN embeddings e ON e.vec_id <> q.qid
 )
 SELECT qid, nid, label, cosine, rnk
@@ -104,18 +50,18 @@ ORDER BY qid, rnk
 
 @query("q_sim_cosine_topk_brute", oracle=_BRUTE_ORACLE)
 def q_sim_cosine_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     # Norms are hoisted to per-row columns BEFORE the cross join: inside
     # it they'd be re-folded per (query x corpus) pair — |Q| times the
     # work for the corpus side. Same fold, same double, same cosine.
     q = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .withColumn("qnorm", _norm(F.col("qv")))
+        .withColumn("qnorm", norm(F.col("qv")))
     )
     corpus = spread(
         e.select(F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv"))
-    ).withColumn("nnorm", _norm(F.col("nv")))
+    ).withColumn("nnorm", norm(F.col("nv")))
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -124,7 +70,7 @@ def q_sim_cosine_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "nid",
             "label",
-            (_dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm"))).alias(
+            (dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm"))).alias(
                 "cosine"
             ),
         )
@@ -148,19 +94,19 @@ _ANCHORS_SQL = f"(SELECT vec_id AS aid, embedding AS av FROM embeddings WHERE ve
 
 _BUCKET_SQL = f"""
   SELECT e.vec_id, e.label, e.embedding,
-         string_agg(CASE WHEN {_sql_dot('e.embedding', 'a.av')} >= 0 THEN '1' ELSE '0' END,
+         string_agg(CASE WHEN {sql_dot('e.embedding', 'a.av')} >= 0 THEN '1' ELSE '0' END,
                     '' ORDER BY a.aid) AS bucket
   FROM embeddings e, {_ANCHORS_SQL} a
   GROUP BY e.vec_id, e.label, e.embedding
 """
 
 _LSH_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 bucketed AS ({_BUCKET_SQL}),
 q AS (SELECT vec_id AS qid, embedding AS qv, bucket FROM bucketed WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.qid, c.vec_id AS nid,
-         {_sql_dot('q.qv', 'c.embedding')} / ({_sql_norm('q.qv')} * {_sql_norm('c.embedding')}) AS cosine
+         {sql_dot('q.qv', 'c.embedding')} / ({sql_norm('q.qv')} * {sql_norm('c.embedding')}) AS cosine
   FROM q JOIN bucketed c ON q.bucket = c.bucket AND c.vec_id <> q.qid
 )
 SELECT qid, nid, cosine, rnk
@@ -173,7 +119,7 @@ ORDER BY qid, rnk
 
 @query("q_sim_lsh_bucketed_topk", oracle=_LSH_ORACLE)
 def q_sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     anchors = (
         e.filter(F.col("vec_id") < N_ANCHORS)
         .select(F.col("vec_id").alias("aid"), F.col("embedding").alias("av"))
@@ -186,7 +132,7 @@ def q_sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bit",
             F.struct(
                 F.col("aid"),
-                F.when(_dot(F.col("embedding"), F.col("av")) >= 0, "1")
+                F.when(dot(F.col("embedding"), F.col("av")) >= 0, "1")
                 .otherwise("0")
                 .alias("bit"),
             ),
@@ -199,7 +145,7 @@ def q_sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # norm hoisted per row before the bucket join (see brute-force note)
-    bucketed = bucketed.withColumn("nrm", _norm(F.col("embedding")))
+    bucketed = bucketed.withColumn("nrm", norm(F.col("embedding")))
     q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
@@ -213,7 +159,7 @@ def q_sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             F.col("c.vec_id").alias("nid"),
             (
-                _dot(F.col("qv"), F.col("c.embedding"))
+                dot(F.col("qv"), F.col("c.embedding"))
                 / (F.col("qnorm") * F.col("c.nrm"))
             ).alias("cosine"),
         )
@@ -235,11 +181,11 @@ def q_sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # top-k cut use the ROUNDED value with vec_id tiebreak so the selected
 # row set is identical on both sides.
 _PANDAS_COS_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
 SELECT e.vec_id,
-       round({_sql_dot('e.embedding', 'q.qv')}
-             / ({_sql_norm('e.embedding')} * {_sql_norm('q.qv')}), 6) AS cosine_r
+       round({sql_dot('e.embedding', 'q.qv')}
+             / ({sql_norm('e.embedding')} * {sql_norm('q.qv')}), 6) AS cosine_r
 FROM embeddings e, q
 WHERE e.vec_id <> 0
 ORDER BY cosine_r DESC, e.vec_id
@@ -254,10 +200,7 @@ def q_sim_pandas_udf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (matrix @ query), never per-row Python."""
     import numpy as np
 
-    e = _directional(load(spark, sf_dir, "embeddings"))
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time query-vector fetch: no plan memo
+    e = directional(load(spark, sf_dir, "embeddings"))
     qrow = (
         e.filter(F.col("vec_id") == 0).select("embedding").head()
     )
@@ -308,8 +251,8 @@ def _ivf_assign_sql(src: str, keep: int, id_alias: str) -> str:
     SELECT s.vec_id, s.embedding, c.cid,
            row_number() OVER (
              PARTITION BY s.vec_id
-             ORDER BY {_sql_dot('s.embedding', 'c.cv')}
-                      / ({_sql_norm('s.embedding')} * {_sql_norm('c.cv')}) DESC,
+             ORDER BY {sql_dot('s.embedding', 'c.cv')}
+                      / ({sql_norm('s.embedding')} * {sql_norm('c.cv')}) DESC,
                       c.cid) AS crnk
     FROM {src} s, {_CENTROIDS_SQL} c
   ) WHERE crnk <= {keep}
@@ -317,13 +260,13 @@ def _ivf_assign_sql(src: str, keep: int, id_alias: str) -> str:
 
 
 _IVF_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 lists AS ({_ivf_assign_sql('embeddings', 1, 'nid')}),
 probes AS ({_ivf_assign_sql(f'(SELECT * FROM embeddings WHERE vec_id < {N_QUERIES})', NPROBE, 'qid')}),
 scored AS (
   SELECT DISTINCT p.qid, l.nid,
-         {_sql_dot('p.embedding', 'l.embedding')}
-           / ({_sql_norm('p.embedding')} * {_sql_norm('l.embedding')}) AS cosine
+         {sql_dot('p.embedding', 'l.embedding')}
+           / ({sql_norm('p.embedding')} * {sql_norm('l.embedding')}) AS cosine
   FROM probes p JOIN lists l ON p.cid = l.cid AND l.nid <> p.qid
 )
 SELECT qid, nid, cosine, rnk
@@ -340,13 +283,13 @@ def _ivf_assign(e: DataFrame, centroids: DataFrame, keep: int, id_alias: str) ->
     # centroid) — k-fold redundant work. The hoisted expression computes
     # the identical doubles, so ranking (and the oracle hash) is
     # unchanged.
-    cents = F.broadcast(centroids.withColumn("cnorm", _norm(F.col("cv"))))
+    cents = F.broadcast(centroids.withColumn("cnorm", norm(F.col("cv"))))
     ranked = (
-        spread(e).withColumn("enorm", _norm(F.col("embedding")))
+        spread(e).withColumn("enorm", norm(F.col("embedding")))
         .crossJoin(cents)
         .withColumn(
             "ccos",
-            _dot(F.col("embedding"), F.col("cv"))
+            dot(F.col("embedding"), F.col("cv"))
             / (F.col("enorm") * F.col("cnorm")),
         )
         .withColumn(
@@ -362,7 +305,7 @@ def _ivf_assign(e: DataFrame, centroids: DataFrame, keep: int, id_alias: str) ->
 
 @query("q_sim_ivf_topk", oracle=_IVF_ORACLE)
 def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     centroids = e.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
@@ -375,10 +318,10 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "qid",
         F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("qnorm"),
+        norm(F.col("embedding")).alias("qnorm"),
         "cid",
     )
-    lists = lists.withColumn("nnorm", _norm(F.col("embedding")))
+    lists = lists.withColumn("nnorm", norm(F.col("embedding")))
     # probes is bounded by LITERAL constants (N_QUERIES x NPROBE rows),
     # so the hint is safe at any corpus scale — without it AQE plans a
     # sort-merge join that sorts the full inverted-list side
@@ -389,7 +332,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "nid",
             (
-                _dot(F.col("qv"), F.col("embedding"))
+                dot(F.col("qv"), F.col("embedding"))
                 / (F.col("qnorm") * F.col("nnorm"))
             ).alias("cosine"),
         )
@@ -422,7 +365,7 @@ _MIN_RECALL = 0.3
 # shadow CTE), not a hardcoded literal — a zero-norm vector among the
 # query ids must shrink both sides identically, not fail the gate.
 _KMEANS_EVAL_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 nq AS (SELECT count(*) AS n FROM embeddings WHERE vec_id < {N_QUERIES})
 SELECT CAST(n AS BIGINT) AS n_queries,
        CAST(n * {TOP_K} AS BIGINT) AS total_rows,
@@ -445,7 +388,7 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     three single-row aggregates instead of being returned raw."""
     from ..operators.kmeans import EmptyCorpusError, train_kmeans
 
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     try:
         trained = train_kmeans(
             e.select("vec_id", "embedding"), k=N_CENTROIDS, max_iter=4
@@ -492,10 +435,10 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "qid",
         F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("qnorm"),
+        norm(F.col("embedding")).alias("qnorm"),
         "cid",
     )
-    lists = lists.withColumn("nnorm", _norm(F.col("embedding")))
+    lists = lists.withColumn("nnorm", norm(F.col("embedding")))
     # probes is bounded by LITERAL constants (N_QUERIES x NPROBE rows),
     # so the hint is safe at any corpus scale — without it AQE plans a
     # sort-merge join that sorts the full inverted-list side
@@ -506,7 +449,7 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "nid",
             (
-                _dot(F.col("qv"), F.col("embedding"))
+                dot(F.col("qv"), F.col("embedding"))
                 / (F.col("qnorm") * F.col("nnorm"))
             ).alias("cosine"),
         )
@@ -524,13 +467,13 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("qid"),
             F.col("embedding").alias("qv"),
-            _norm(F.col("embedding")).alias("qnorm"),
+            norm(F.col("embedding")).alias("qnorm"),
         )
     )
     corpus = e.select(
         F.col("vec_id").alias("nid"),
         "embedding",
-        _norm(F.col("embedding")).alias("nnorm"),
+        norm(F.col("embedding")).alias("nnorm"),
     )
     exact = (
         qv.join(corpus, F.col("nid") != F.col("qid"))
@@ -538,7 +481,7 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "nid",
             (
-                _dot(F.col("qv"), F.col("embedding"))
+                dot(F.col("qv"), F.col("embedding"))
                 / (F.col("qnorm") * F.col("nnorm"))
             ).alias("cosine"),
         )
@@ -586,11 +529,11 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RAG_K = 3
 
 _RAG_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
 scored AS (
   SELECT q.qid, e.vec_id AS doc_id,
-         {_sql_dot('q.qv', 'e.embedding')} / ({_sql_norm('q.qv')} * {_sql_norm('e.embedding')}) AS cosine
+         {sql_dot('q.qv', 'e.embedding')} / ({sql_norm('q.qv')} * {sql_norm('e.embedding')}) AS cosine
   FROM q JOIN embeddings e ON e.vec_id <> q.qid
 ),
 hits AS (
@@ -607,15 +550,15 @@ ORDER BY qid, rnk
 
 @query("q_rag_retrieve_enrich", oracle=_RAG_ORACLE)
 def q_rag_retrieve_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     q = (
         e.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .withColumn("qnorm", _norm(F.col("qv")))
+        .withColumn("qnorm", norm(F.col("qv")))
     )
     corpus = spread(
         e.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("nv"))
-    ).withColumn("nnorm", _norm(F.col("nv")))
+    ).withColumn("nnorm", norm(F.col("nv")))
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -623,7 +566,7 @@ def q_rag_retrieve_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "doc_id",
-            (_dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm"))).alias(
+            (dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm"))).alias(
                 "cosine"
             ),
         )
@@ -656,12 +599,12 @@ def q_rag_retrieve_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KNN_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 q AS (SELECT vec_id AS qid, embedding AS qv, label AS true_label
            FROM embeddings WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.qid, q.true_label, e.label,
-         {_sql_dot('q.qv', 'e.embedding')} / ({_sql_norm('q.qv')} * {_sql_norm('e.embedding')}) AS cosine,
+         {sql_dot('q.qv', 'e.embedding')} / ({sql_norm('q.qv')} * {sql_norm('e.embedding')}) AS cosine,
          e.vec_id AS nid
   FROM q JOIN embeddings e ON e.vec_id >= {N_QUERIES}
 ),
@@ -694,7 +637,7 @@ ORDER BY true_label
 
 @query("q_sim_knn_eval", oracle=_KNN_ORACLE)
 def q_sim_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     q = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(
@@ -702,13 +645,13 @@ def q_sim_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qv"),
             F.col("label").alias("true_label"),
         )
-        .withColumn("qnorm", _norm(F.col("qv")))
+        .withColumn("qnorm", norm(F.col("qv")))
     )
     corpus = spread(
         e.filter(F.col("vec_id") >= N_QUERIES).select(
             F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv")
         )
-    ).withColumn("nnorm", _norm(F.col("nv")))
+    ).withColumn("nnorm", norm(F.col("nv")))
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -717,7 +660,7 @@ def q_sim_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             "label",
             "nid",
-            (_dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm")))
+            (dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm")))
             .alias("cosine"),
         )
     )
@@ -773,17 +716,17 @@ _MIPS_K = 5
 _MIPS_NQ = 8
 
 _MIPS_ORACLE = f"""
-WITH {_sql_directional_cte()},
-m AS (SELECT max({_sql_norm('embedding')}) AS mx,
-             max({_sql_norm('embedding')}) * max({_sql_norm('embedding')}) AS mx2
+WITH {sql_directional_cte()},
+m AS (SELECT max({sql_norm('embedding')}) AS mx,
+             max({sql_norm('embedding')}) * max({sql_norm('embedding')}) AS mx2
       FROM embeddings),
 q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
       WHERE vec_id < {_MIPS_NQ}),
 scored AS (
   SELECT q.qid, e.vec_id AS nid,
-         {_sql_dot('q.qv', 'e.embedding')} AS dot,
-         sqrt({_sql_dot('e.embedding', 'e.embedding')}
-              + (m.mx2 - {_sql_dot('e.embedding', 'e.embedding')})) AS aug_norm,
+         {sql_dot('q.qv', 'e.embedding')} AS dot,
+         sqrt({sql_dot('e.embedding', 'e.embedding')}
+              + (m.mx2 - {sql_dot('e.embedding', 'e.embedding')})) AS aug_norm,
          m.mx AS mx
   FROM q JOIN embeddings e ON e.vec_id <> q.qid CROSS JOIN m
 )
@@ -802,13 +745,13 @@ def q_sim_mips_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k by inner product through the norm-augmentation reduction;
     the un-augmented oracle certifies the reduction returns exactly the
     MIPS ranking and that every augmented corpus norm equals M."""
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     m = F.broadcast(
         e.agg(
-            F.max(_norm(F.col("embedding"))).alias("mx"),
+            F.max(norm(F.col("embedding"))).alias("mx"),
             (
-                F.max(_norm(F.col("embedding")))
-                * F.max(_norm(F.col("embedding")))
+                F.max(norm(F.col("embedding")))
+                * F.max(norm(F.col("embedding")))
             ).alias("mx2"),
         )
     )
@@ -834,7 +777,7 @@ def q_sim_mips_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sqrt(
                     F.greatest(
                         F.lit(0.0),
-                        F.col("mx2") - _dot(F.col("nv"), F.col("nv")),
+                        F.col("mx2") - dot(F.col("nv"), F.col("nv")),
                     )
                 )
             ),
@@ -845,8 +788,8 @@ def q_sim_mips_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
         # driver hash sees bit-identical deviations on both engines.
         (
             F.sqrt(
-                _dot(F.col("nv"), F.col("nv"))
-                + (F.col("mx2") - _dot(F.col("nv"), F.col("nv")))
+                dot(F.col("nv"), F.col("nv"))
+                + (F.col("mx2") - dot(F.col("nv"), F.col("nv")))
             )
             - F.col("mx")
         ).alias("dev"),
@@ -860,7 +803,7 @@ def q_sim_mips_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "nid",
-            _dot(F.col("qav"), F.col("nav")).alias("dot"),
+            dot(F.col("qav"), F.col("nav")).alias("dot"),
             "dev",
         )
     )
@@ -906,13 +849,13 @@ def q_sim_mips_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
 NDCG_K = 10
 
 _NDCG_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 q AS (SELECT vec_id AS qid, embedding AS qv, label AS true_label
       FROM embeddings WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.qid, q.true_label,
          CAST(e.label = q.true_label AS INTEGER) AS rel,
-         {_sql_dot('q.qv', 'e.embedding')} / ({_sql_norm('q.qv')} * {_sql_norm('e.embedding')}) AS cosine,
+         {sql_dot('q.qv', 'e.embedding')} / ({sql_norm('q.qv')} * {sql_norm('e.embedding')}) AS cosine,
          e.vec_id AS nid
   FROM q JOIN embeddings e ON e.vec_id >= {N_QUERIES}
 ),
@@ -947,7 +890,7 @@ ORDER BY qid
 def q_eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query NDCG@10 of brute-force cosine retrieval under binary
     label relevance — does the space rank same-label neighbors early?"""
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     q = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(
@@ -955,13 +898,13 @@ def q_eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qv"),
             F.col("label").alias("true_label"),
         )
-        .withColumn("qnorm", _norm(F.col("qv")))
+        .withColumn("qnorm", norm(F.col("qv")))
     )
     corpus = spread(
         e.filter(F.col("vec_id") >= N_QUERIES).select(
             F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv")
         )
-    ).withColumn("nnorm", _norm(F.col("nv")))
+    ).withColumn("nnorm", norm(F.col("nv")))
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -970,7 +913,7 @@ def q_eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             (F.col("label") == F.col("true_label")).cast("int").alias("rel"),
             "nid",
-            (_dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm")))
+            (dot(F.col("qv"), F.col("nv")) / (F.col("qnorm") * F.col("nnorm")))
             .alias("cosine"),
         )
     )
@@ -1035,13 +978,13 @@ def q_eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _MRR_ORACLE = f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 q AS (SELECT vec_id AS qid, embedding AS qv, label AS true_label
       FROM embeddings WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.qid, q.true_label,
          CAST(e.label = q.true_label AS INTEGER) AS rel,
-         {_sql_dot('q.qv', 'e.embedding')} / ({_sql_norm('q.qv')} * {_sql_norm('e.embedding')}) AS cosine,
+         {sql_dot('q.qv', 'e.embedding')} / ({sql_norm('q.qv')} * {sql_norm('e.embedding')}) AS cosine,
          e.vec_id AS nid
   FROM q JOIN embeddings e ON e.vec_id >= {N_QUERIES}
 ),
@@ -1069,7 +1012,7 @@ def q_eval_mrr_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query reciprocal rank of the first same-label neighbor in
     the brute-force cosine top-10 (0 when none) — where does the first
     relevant hit land?"""
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     q = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(
@@ -1077,7 +1020,7 @@ def q_eval_mrr_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qv"),
             F.col("label").alias("true_label"),
         )
-        .withColumn("qnorm", _norm(F.col("qv")))
+        .withColumn("qnorm", norm(F.col("qv")))
     )
     corpus = spread(
         e.filter(F.col("vec_id") >= N_QUERIES).select(
@@ -1085,7 +1028,7 @@ def q_eval_mrr_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.col("embedding").alias("nv"),
         )
-    ).withColumn("nnorm", _norm(F.col("nv")))
+    ).withColumn("nnorm", norm(F.col("nv")))
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -1095,7 +1038,7 @@ def q_eval_mrr_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("label") == F.col("true_label")).cast("int").alias("rel"),
             "nid",
             (
-                _dot(F.col("qv"), F.col("nv"))
+                dot(F.col("qv"), F.col("nv"))
                 / (F.col("qnorm") * F.col("nnorm"))
             ).alias("cosine"),
         )
@@ -1182,27 +1125,27 @@ def _rs_oracle() -> str:
         f"c{b}" for b in range(_RS_BANDS)
     ) + ")"
     return f"""
-WITH {_sql_directional_cte()},
+WITH {sql_directional_cte()},
 anch AS (SELECT vec_id AS aid, embedding AS av FROM embeddings
          WHERE vec_id < {_RS_N_ANCHORS}),
 sliced AS (SELECT vec_id, embedding FROM embeddings
            ORDER BY {sql_cal_key('vec_id')}, vec_id LIMIT {CAL_SLICE_K}),
 bucketed AS (
   SELECT e.vec_id, e.embedding,
-         string_agg(CASE WHEN {_sql_dot('e.embedding', 'a.av')} >= 0
+         string_agg(CASE WHEN {sql_dot('e.embedding', 'a.av')} >= 0
                     THEN '1' ELSE '0' END, '' ORDER BY a.aid) AS bits
   FROM sliced e, anch a
   GROUP BY e.vec_id, e.embedding
 ),
 banded AS (
-  SELECT vec_id, embedding, {_sql_norm('embedding')} AS nrm, {band_cols}
+  SELECT vec_id, embedding, {sql_norm('embedding')} AS nrm, {band_cols}
   FROM bucketed
 ),
 pairs AS (
   SELECT {_RS_TIER_SQL.format(c='cosine')} AS cos_tier,
          {", ".join(f"c{b}" for b in range(_RS_BANDS))}
   FROM (
-    SELECT {_sql_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
+    SELECT {sql_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
              AS cosine,
            {band_eq}
     FROM banded a JOIN banded b ON a.vec_id < b.vec_id
@@ -1226,7 +1169,7 @@ RANGE_SEARCH_EVAL_ORACLE = _rs_oracle()
 def q_sim_range_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.triangle import triangle_self_join
 
-    e = _directional(load(spark, sf_dir, "embeddings"))
+    e = directional(load(spark, sf_dir, "embeddings"))
     anchors = e.filter(F.col("vec_id") < _RS_N_ANCHORS).select(
         F.col("vec_id").alias("aid"), F.col("embedding").alias("av")
     )
@@ -1240,7 +1183,7 @@ def q_sim_range_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bit",
             F.struct(
                 F.col("aid"),
-                F.when(_dot(F.col("embedding"), F.col("av")) >= 0, "1")
+                F.when(dot(F.col("embedding"), F.col("av")) >= 0, "1")
                 .otherwise("0")
                 .alias("bit"),
             ),
@@ -1263,7 +1206,7 @@ def q_sim_range_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = bucketed.select(
         "vec_id",
         "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
         *[
             F.substring("bits", 1 + b * _RS_BITS, _RS_BITS).alias(f"band{b}")
             for b in range(_RS_BANDS)
@@ -1272,7 +1215,7 @@ def q_sim_range_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = triangle_self_join(
         banded, block_cols=[], id_col="vec_id", n_sub=4
     )
-    cosine = _dot(F.col("embedding_a"), F.col("embedding_b")) / (
+    cosine = dot(F.col("embedding_a"), F.col("embedding_b")) / (
         F.col("nrm_a") * F.col("nrm_b")
     )
     scored = pairs.select(

@@ -55,9 +55,6 @@ def connected_components(
         nodes.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
     def ckpt(df: DataFrame) -> DataFrame:
-        from ..tables import note_data_computed
-
-        note_data_computed()  # iterative build computes data: no memo
         return df.checkpoint() if reliable else df.localCheckpoint()
 
     bi = edges.select(

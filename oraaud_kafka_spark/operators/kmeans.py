@@ -38,7 +38,7 @@ def _lit_vec(vals: list[float]) -> Column:
 
 def _dot_lit(vec: Column, vals: list[float]) -> Column:
     """Sequential-fold dot of an array column against a driver-side
-    constant vector (same fold order as similarity._dot)."""
+    constant vector (same fold order as queries.dot)."""
     return F.aggregate(
         F.zip_with(vec, _lit_vec(vals), lambda x, y: x.cast("double") * y),
         F.lit(0.0),
@@ -132,9 +132,6 @@ def train_kmeans(
     Each round runs ONE Spark job: project assignment (codegen'd argmax)
     -> groupBy(cid) with dim partial-agg'd avg()s -> collect k rows to
     the driver. Empty clusters keep their previous centroid."""
-    from ..tables import note_data_computed
-
-    note_data_computed()  # iterative build computes data: no memo
     init = (
         vectors.orderBy(id_col)
         .limit(k)

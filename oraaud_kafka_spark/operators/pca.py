@@ -69,9 +69,6 @@ def power_iteration_top_pc(
     O(dim); executor work is one fused projection + dim partial sums
     per round.
     """
-    from ..tables import note_data_computed
-
-    note_data_computed()  # iterative build computes data: no memo
     n = vectors.count()
     if n == 0:
         raise ValueError("power_iteration_top_pc: empty input")

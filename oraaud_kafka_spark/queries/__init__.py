@@ -19,7 +19,7 @@ min/max/count and decimal arithmetic are exact and safe as-is.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Wide enough for sf0.1 and beyond (plain sums only).
@@ -94,4 +94,62 @@ def sql_md5_mod(salt: str, key: str, mod: int) -> str:
     return (
         f"CAST('0x' || substring(md5('{salt}:' || CAST({key} AS VARCHAR)), "
         f"1, 12) AS BIGINT) % {mod}"
+    )
+
+
+# Embedding vector maths: elements are cast float->double (exact) before
+# any arithmetic, and the folds run sequentially in array order on both
+# engines (F.aggregate <-> list_reduce), so dot products and norms are
+# bit-identical. The one definition behind llm/similarity.py and
+# llm/dedup.py.
+def dot(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def norm(a: Column) -> Column:
+    return F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+
+
+def sql_dot(a: str, b: str) -> str:
+    """DuckDB-side twin of :func:`dot`."""
+    return (
+        "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
+        f"list_transform(list_zip({a}, {b}), "
+        "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))), (acc, x) -> acc + x)"
+    )
+
+
+def sql_norm(a: str) -> str:
+    """DuckDB-side twin of :func:`norm`."""
+    return (
+        "sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), "
+        f"list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
+        "(acc, x) -> acc + x))"
+    )
+
+
+# Zero-norm vectors have no direction; every similarity operator excludes
+# them identically on both engines. The oracle side prepends this CTE
+# (shadowing the base view via the main. qualifier); the Spark side
+# filters with the same norm expression after load.
+def directional(df: DataFrame) -> DataFrame:
+    return df.filter(norm(F.col("embedding")) > 0)
+
+
+def sql_directional_cte() -> str:
+    """DuckDB-side twin of :func:`directional`."""
+    return (
+        "embeddings AS (SELECT * FROM main.embeddings WHERE "
+        + sql_norm("embedding")
+        + " > 0)"
     )

@@ -1255,9 +1255,6 @@ def _exact_ntile_multi(
     )
     from ..operators.bucketing import boundary_bucket
 
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time boundary scan: no plan memo
     qs = [i / n_buckets for i in range(1, n_buckets)]
     brows = melted.groupBy("dim").agg(
         F.percentile_approx("vd", qs, 10000).alias("b")

@@ -101,9 +101,6 @@ def q_graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and even over a literal frame the three-branch join plan pays
     ~1.4 s codegen per fresh QueryExecution. Only exact integers cross
     the driver; the ratio division stays a Spark expression."""
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time events pass: no plan memo
     collected = _edges(spark, sf_dir).collect()
     # The |types|²-bounded edge list is already on the driver, so the
     # degree fold happens HERE in exact integer arithmetic — building
@@ -241,9 +238,6 @@ def q_events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out (each rank feeds every out-edge) would inline it into an
     exponentially-sized expression tree before constant folding could
     collapse it."""
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time events pass + PR loop: no plan memo
     collected = _edges(spark, sf_dir).collect()
     if not collected:
         return spark.createDataFrame(

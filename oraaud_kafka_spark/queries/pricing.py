@@ -346,9 +346,6 @@ def q_sql_recursive_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-phase plan equals it."""
     from pyspark.sql import Window
 
-    from ..tables import note_data_computed
-
-    note_data_computed()  # build-time events pass: no plan memo
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     edges = [

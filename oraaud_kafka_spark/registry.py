@@ -15,6 +15,7 @@ callable and the oracle SQL side-by-side and hash-compares values, so:
 from __future__ import annotations
 
 import importlib
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,41 +60,31 @@ def query(name: str, oracle: str | None = None):
     DuckDB oracle SQL string proving the same semantics.
 
     The registered callable memoizes its built DataFrame per
-    (session, sf_dir) — prepared-statement-style plan caching. Every
-    query here is a pure function of (spark, sf_dir) returning an
-    immutable logical plan, and driver-side plan construction is pure
-    py4j round-trips (up to ~0.5 s for expression-dense queries like the
-    16-permutation MinHash), so rebuilding it on every invocation is
-    waste the engine's callers shouldn't pay twice.
+    (session, sf_dir). A query is a pure function of (spark, sf_dir)
+    returning a logical plan, and building that plan is driver-side
+    py4j work (up to ~0.5 s for expression-dense queries such as the
+    16-permutation MinHash), so a repeat call reuses the plan.
 
-    EXCEPT when the build COMPUTES DATA (round-15 measurement-integrity
-    fix): a builder that eagerly checkpoints an intermediate
-    (tables.materialize / checkpoint_sort) or collects a bounded table
-    to drive an iterative algorithm returns a DataFrame carrying
-    computed state, not a pure plan. Memoizing it would serve those
-    precomputed results to every later invocation — the bench's timed
-    samples included (r14 did exactly this, under-measuring every
-    materialize-using query). Such builds are detected via
-    tables.DATA_EPOCH and rebuilt — and therefore recomputed from
-    parquet — on every invocation.
+    The memo skips any build that runs a Spark job: an eager checkpoint
+    (tables.materialize), a collect or count that feeds literals into
+    the plan, an iterative driver loop. Such a frame carries computed
+    state, and handing it to a later call would serve precomputed
+    results instead of recomputing from parquet. _build sees those jobs
+    itself, so no builder has to report them. A build that is first to
+    load a table runs that table's parquet schema job, so it is
+    memoized on its second call instead.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         plans: dict[tuple, DataFrame] = {}
 
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from . import tables
-
             key = (spark, sf_dir)
             df = plans.get(key)
             if df is None:
-                epoch0 = tables.DATA_EPOCH
-                df = fn(spark, sf_dir)
-                if tables.DATA_EPOCH != epoch0:
-                    # build ran jobs / checkpointed: the returned frame
-                    # holds computed state — never memoize it
-                    return df
-                plans[key] = df
+                df, ran_jobs = _build(fn, spark, sf_dir)
+                if not ran_jobs:
+                    plans[key] = df
             return df
 
         cached.__name__ = fn.__name__
@@ -109,18 +100,32 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+def _build(fn: QueryFn, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, bool]:
+    """Run fn and report whether it ran a Spark job.
+
+    The build's jobs carry a unique job tag. Tags add to the caller's
+    job group and tags instead of replacing them, and a nested build's
+    jobs carry the outer tag too. The status store is fed from the
+    listener bus asynchronously, so the bus is drained before the
+    tag is looked up."""
+    sc = spark.sparkContext
+    tag = f"registry-build-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.removeJobTag(tag)
+    jvm_sc = sc._jsc.sc()
+    jvm_sc.listenerBus().waitUntilEmpty()
+    return df, len(jvm_sc.statusTracker().getJobIdsForTag(tag)) > 0
+
+
 def load_all() -> None:
     global _loaded
     if _loaded:
         return
     for mod in _MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Module not written yet during incremental build; only swallow
-            # the registry module itself being absent, not its dependencies.
-            if mod not in str(e):
-                raise
+        importlib.import_module(mod)
     _loaded = True
 
 

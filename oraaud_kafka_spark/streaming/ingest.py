@@ -18,7 +18,7 @@ reference's ack-then-delete.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -383,7 +383,6 @@ class IngestMetrics(StreamingQueryListener):
     bytes: int = 0
     batches: int = 0
     total_batch_ms: float = 0.0
-    _rows: list = field(default_factory=list)
 
     def onQueryStarted(self, event) -> None:
         pass

@@ -108,46 +108,26 @@ def bounded_sort(df: DataFrame, *cols: str) -> DataFrame:
     return df.coalesce(1).sortWithinPartitions(*cols)
 
 
-# Monotone count of build-time DATA computations (eager checkpoints,
-# driver-side collects inside query builders). registry.query snapshots
-# it around each build: a build that bumped it produced a DataFrame
-# carrying COMPUTED STATE (checkpointed blocks / collected literals), so
-# the registry must NOT plan-memoize it — handing the same object to a
-# later invocation would serve precomputed results instead of
-# recomputing from parquet (result caching, which the bench forbids).
-# Round-15 measurement-integrity fix; see OPTIMIZATION_r15.md.
-DATA_EPOCH = 0
-
-
-def note_data_computed() -> None:
-    """Record that the current query build ran a Spark job / collected
-    data. EVERY builder-reachable action site (collect/count/first/
-    head/localCheckpoint) must call this so registry.query skips plan
-    memoization for the build — tests/test_round15_invariants.py sweeps
-    the registry with a job-group probe to catch missed sites."""
-    global DATA_EPOCH
-    DATA_EPOCH += 1
-
-
 def materialize(df: DataFrame, *, checkpoint_dir: str | None = None) -> DataFrame:
     """Eager checkpoint for a multiply-referenced intermediate
     (guide §3.3): the self-join sides' alias-divergent projections
     defeat ReuseExchange, so without materialization the expensive
-    lineage below executes once PER reference. Recomputed from the
-    parquet inputs on every invocation — the builders that call this
-    are never plan-memoized (note_data_computed below), so checkpoint
-    RDDs die with the per-invocation DataFrame and are never served
-    across runs (unlike ``.cache()``, whose CacheManager matches the
-    next run's identical plan and would hand it stale-free but
-    PRE-COMPUTED results — measurement gaming in a bench).
+    lineage below executes once PER reference.
 
-    Durability (round-15, mirroring operators.components): the default
-    ``localCheckpoint`` stores blocks on executors with lineage
-    DISCARDED — fast, but an executor loss mid-query aborts the job,
-    and blocks evicted under memory pressure are unrecoverable. For
-    cluster runs pass ``checkpoint_dir`` and the blocks go through
-    ``DataFrame.checkpoint()`` to that fault-tolerant dir instead. Local
-    runs keep the local default — single-JVM, no executor to lose.
+    The checkpoint is a Spark job, so registry.query never memoizes a
+    build that calls this: every invocation recomputes from the
+    parquet inputs, and the checkpoint blocks die with that
+    invocation's DataFrame. ``.cache()`` would instead let the
+    CacheManager match the next run's identical plan and hand it
+    precomputed results.
+
+    Durability: the default ``localCheckpoint`` stores blocks on
+    executors with lineage discarded. That is fast, but an executor
+    loss mid-query aborts the job, and blocks evicted under memory
+    pressure are unrecoverable. For cluster runs pass
+    ``checkpoint_dir``, and the blocks go through
+    ``DataFrame.checkpoint()`` to that fault-tolerant dir instead.
+    Local runs keep the local default: one JVM, no executor to lose.
 
     Size discipline: each call site states its checkpointed frame's
     cardinality class in a comment; O(corpus) frames must project to
@@ -159,7 +139,6 @@ def materialize(df: DataFrame, *, checkpoint_dir: str | None = None) -> DataFram
     otherwise hides; production never sets it."""
     if os.environ.get("SPARK_GRAFT_PLAN_TRANSPARENT") == "1":
         return df
-    note_data_computed()
     if checkpoint_dir is not None:
         df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=True)

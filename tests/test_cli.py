@@ -6,6 +6,7 @@ from oraaud_kafka_spark.__main__ import (
     EXIT_CONFIG,
     EXIT_USAGE,
     EXIT_WATCHED_PATH,
+    _parse,
     main,
 )
 
@@ -13,6 +14,14 @@ from oraaud_kafka_spark.__main__ import (
 def test_usage_exit_code():
     assert main([]) == EXIT_USAGE
     assert main(["a.conf", "b.conf"]) == EXIT_USAGE
+    assert main(["a.conf", "--onec"]) == EXIT_USAGE
+    assert main(["a.conf", "--checkpoint"]) == EXIT_USAGE
+    assert main(["a.conf", "--checkpoint", "--once"]) == EXIT_USAGE
+
+
+def test_command_line_flags_parse_in_any_order():
+    assert _parse(["a.conf"]) == ("a.conf", None, False)
+    assert _parse(["--once", "a.conf", "--checkpoint", "ck"]) == ("a.conf", "ck", True)
 
 
 def test_bad_broker_exit_code(tmp_path):

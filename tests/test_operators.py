@@ -118,14 +118,18 @@ def test_registry_plan_cache_per_session_and_dir(spark):
     """Registered callables memoize the built DataFrame per
     (session, sf_dir): same key returns the identical plan object (no
     rebuild), different sf_dir builds a distinct plan against the other
-    fixture set."""
+    fixture set. The first build in a cold session loads lineitem,
+    whose parquet schema job keeps that one build out of the memo."""
     from oraaud_kafka_spark import registry
+
+    from .conftest import SF_DIR, SF_DIR_CORRECTNESS
 
     registry.load_all()
     fn = registry.QUERIES["q1_pricing_summary"]
-    a = fn(spark, "/root/testdata/sf0.001")
-    b = fn(spark, "/root/testdata/sf0.001")
-    c = fn(spark, "/root/testdata/sf0.01")
+    fn(spark, SF_DIR)
+    a = fn(spark, SF_DIR)
+    b = fn(spark, SF_DIR)
+    c = fn(spark, SF_DIR_CORRECTNESS)
     assert a is b
     assert a is not c
     assert a.count() >= 0 and c.count() >= 0  # both plans executable

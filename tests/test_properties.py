@@ -6,8 +6,6 @@ sides."""
 
 from __future__ import annotations
 
-import pytest
-
 from datetime import datetime, timedelta
 
 from hypothesis import HealthCheck, given, settings
@@ -823,7 +821,6 @@ def _write_tbl(spark, tmp_path_factory, name, df):
     ).filter(lambda v: any(p for _, p in v) and any(not p for _, p in v))
 )
 @_slow
-@pytest.mark.slow  # ~45 s: 8 hypothesis examples x full AUC query
 def test_auc_matches_pair_counting_property(spark, tmp_path_factory, rows):
     """Rank-sum AUC == P(pos > neg) + 0.5 P(tie) counted over all
     pos x neg pairs, on adversarially tied random score sets."""
@@ -872,7 +869,6 @@ def test_auc_matches_pair_counting_property(spark, tmp_path_factory, rows):
     )
 )
 @_slow
-@pytest.mark.slow  # ~46 s: 8 hypothesis examples x full t-closeness query
 def test_t_closeness_matches_python_reference(spark, tmp_path_factory, rows):
     """Per-class TVD vs the corpus band distribution == the direct
     0.5 * sum(|p_class - p_corpus|) over ALL bands, computed with exact

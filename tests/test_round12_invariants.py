@@ -2,7 +2,7 @@
 audience overlap, dynamic-gap sessionization, conversion-rate rollup)
 is registered in queries/aggregates.py and queries/event_time.py —
 the sf0.001 parity runs in the registry-wide test_parity sweep, and
-the driver-SF sweep plus the operator-specific certifications live
+the sf0.01 sweep plus the operator-specific certifications live
 here."""
 
 from __future__ import annotations
@@ -22,25 +22,6 @@ _R12_NEW = (
     "q_time_conversion_rate",
     "q_dedup_incremental",
 )
-
-
-def test_r12_new_ops_were_driver_verified():
-    """The four ops new in round 12 shipped inside that round's driver
-    window (never-verified rows are forbidden); since round 13 they
-    cycle with the ledger like every other green row, so the durable
-    invariant is the r12 artifact itself: all four present and green."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..",
-                        "CORRECTNESS_r12.json")
-    rows = json.load(open(path))
-    for name in _R12_NEW:
-        row = rows[name]
-        assert all(
-            row.get(k, True)
-            for k in ("rows_match", "schema_match", "hash_match")
-        ), f"{name}: {row}"
 
 
 @pytest.mark.parametrize("name", _R12_NEW)

@@ -2,7 +2,7 @@
 Holt-Winters, SRP range-search S-curve eval, CDC sub-file chunking) is
 registered in queries/event_time.py, llm/similarity.py and
 llm/multimodal.py — the sf0.001 parity runs in the registry-wide
-test_parity sweep, and the driver-SF sweep plus the operator-specific
+test_parity sweep, and the sf0.01 sweep plus the operator-specific
 certifications live here."""
 
 from __future__ import annotations
@@ -21,25 +21,6 @@ _R13_NEW = (
     "q_sim_range_search_eval",
     "q_time_holt_winters",
 )
-
-
-def test_r13_new_ops_were_driver_verified():
-    """The three ops new in round 13 shipped inside that round's driver
-    window (never-verified rows are forbidden); since round 14 they
-    cycle with the ledger like every other green row, so the durable
-    invariant is the r13 artifact itself: all three present and green."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..",
-                        "CORRECTNESS_r13.json")
-    rows = json.load(open(path))
-    for name in _R13_NEW:
-        row = rows[name]
-        assert all(
-            row.get(k, True)
-            for k in ("rows_match", "schema_match", "hash_match")
-        ), f"{name}: {row}"
 
 
 @pytest.mark.parametrize("name", _R13_NEW)
@@ -78,12 +59,13 @@ def test_range_search_anchor_count_is_full(spark):
     Pin the anchor count at both SFs so that degradation is loud."""
     from pyspark.sql import functions as F
 
-    from oraaud_kafka_spark.llm.similarity import _RS_N_ANCHORS, _directional
+    from oraaud_kafka_spark.llm.similarity import _RS_N_ANCHORS
+    from oraaud_kafka_spark.queries import directional
     from oraaud_kafka_spark.tables import load
 
     for sf_dir in (SF_DIR, SF_DIR_CORRECTNESS):
         n = (
-            _directional(load(spark, sf_dir, "embeddings"))
+            directional(load(spark, sf_dir, "embeddings"))
             .filter(F.col("vec_id") < _RS_N_ANCHORS)
             .count()
         )

@@ -1,13 +1,11 @@
-"""Round-15 measurement-integrity invariants.
+"""Round-15 invariants: the registry memo and three operators.
 
-Round 14 introduced eager materialization (tables.materialize /
-checkpoint_sort) while the registry's round-13 plan memo was still
-handing the SAME DataFrame object to every invocation. For a build that
-computes data (eager checkpoint, driver-side collect loop) that object
-carries the computed state, so every bench sample after the first read
-checkpointed blocks / baked-in literals instead of recomputing from
-parquet — result caching, which the bench forbids. The fix: builds that
-bump tables.DATA_EPOCH are never memoized. These tests pin the fix.
+A query build that runs a Spark job (an eager checkpoint, a
+driver-side collect loop) returns a DataFrame carrying computed state.
+If the registry memoized it, every later invocation would read that
+state instead of recomputing from parquet. registry.query tags each
+build's jobs and memoizes only builds that ran none; these tests pin
+that rule.
 
 Round 15 also registered three operators (BM25 top-k in llm/text.py,
 co-purchase link prediction in queries/graphs.py, Neyman allocation in
@@ -44,14 +42,17 @@ _DATA_COMPUTING = (
 _PLAN_ONLY = ("q_agg_rollup", "q1_pricing_summary", "q_dedup_minhash_lsh")
 
 
+@pytest.fixture(scope="module")
+def warm_tables(spark):
+    """The first load of each table runs a parquet schema job, which
+    would keep whichever build touches the table first out of the memo
+    once."""
+    tables.register_views(spark, SF_DIR)
+
+
 @pytest.mark.parametrize("name", _DATA_COMPUTING)
-def test_data_computing_builds_are_never_memoized(spark, name):
-    epoch0 = tables.DATA_EPOCH
+def test_data_computing_builds_are_never_memoized(spark, warm_tables, name):
     df1 = registry.QUERIES[name](spark, SF_DIR)
-    assert tables.DATA_EPOCH > epoch0, (
-        f"{name} no longer computes at build time — move it to the "
-        "plan-only list"
-    )
     df2 = registry.QUERIES[name](spark, SF_DIR)
     assert df1 is not df2, (
         f"{name} computes data at build time but the registry served a "
@@ -61,14 +62,48 @@ def test_data_computing_builds_are_never_memoized(spark, name):
 
 
 @pytest.mark.parametrize("name", _PLAN_ONLY)
-def test_plan_only_builds_keep_the_memo(spark, name):
-    epoch0 = tables.DATA_EPOCH
+def test_plan_only_builds_keep_the_memo(spark, warm_tables, name):
     df1 = registry.QUERIES[name](spark, SF_DIR)
-    assert tables.DATA_EPOCH == epoch0, (
-        f"{name} started computing at build time — its memo entry is "
-        "now a result cache; audit the new action site"
+    assert registry.QUERIES[name](spark, SF_DIR) is df1, (
+        f"{name} started computing at build time — its memo entry "
+        "would be a result cache; audit the new action site"
     )
-    assert registry.QUERIES[name](spark, SF_DIR) is df1
+
+
+def test_memo_sees_build_jobs_and_keeps_the_callers_tags(spark, monkeypatch):
+    """A build that runs a job is rebuilt on every call with no help
+    from the builder, and the build's job tag leaves the caller's job
+    group and tags as they were."""
+    monkeypatch.setattr(registry, "QUERIES", {})
+
+    @registry.query("q_toy_counts")
+    def counts(spark, sf_dir):
+        return spark.range(spark.range(7).count())
+
+    @registry.query("q_toy_plan")
+    def plan(spark, sf_dir):
+        return spark.range(7)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller")
+    sc.addJobTag("caller-tag")
+    try:
+        assert counts(spark, SF_DIR) is not counts(spark, SF_DIR)
+        assert plan(spark, SF_DIR) is plan(spark, SF_DIR)
+        assert set(sc.getJobTags()) == {"caller-tag"}
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.removeJobTag("caller-tag")
+        sc.setJobGroup(None, None)
+
+
+def test_load_all_fails_on_a_missing_module(monkeypatch):
+    monkeypatch.setattr(
+        registry, "_MODULES", ("oraaud_kafka_spark.queries.no_such_module",)
+    )
+    monkeypatch.setattr(registry, "_loaded", False)
+    with pytest.raises(ModuleNotFoundError):
+        registry.load_all()
 
 
 def test_materialize_reliable_checkpoint(spark, tmp_path):
@@ -84,37 +119,6 @@ def test_materialize_reliable_checkpoint(spark, tmp_path):
     assert ckpt_files, "reliable checkpoint wrote nothing to checkpoint_dir"
     # default stays the executor-local fast path and still computes
     assert tables.materialize(spark.range(5)).count() == 5
-
-
-def test_registry_sweep_no_build_time_jobs_escape_the_bypass(spark):
-    """Completeness net for note_data_computed(): build EVERY registered
-    query under a unique job group; if any Spark job ran during the
-    build, the build must not have been memoized. Catches a new
-    build-time action site added without the note call."""
-    # Pre-warm every fixture-table load (and the temp views over them):
-    # the FIRST spark.read.parquet of a table runs a schema-inference /
-    # file-listing job ("parquet at NativeMethodAccessor") that is plan
-    # METADATA, not query data — without the warm-up it charges to
-    # whichever query touches the table first and false-flags it.
-    tables.register_views(spark, SF_DIR)
-    tracker = spark.sparkContext.statusTracker()
-    missed = []
-    for i, name in enumerate(registry.QUERIES):
-        group = f"r15-probe-{i}-{name}"
-        spark.sparkContext.setJobGroup(group, name)
-        try:
-            df1 = registry.QUERIES[name](spark, SF_DIR)
-        finally:
-            spark.sparkContext.setJobGroup(None, None)
-        ran_jobs = bool(tracker.getJobIdsForGroup(group))
-        if ran_jobs:
-            df2 = registry.QUERIES[name](spark, SF_DIR)
-            if df1 is df2:
-                missed.append(name)
-    assert not missed, (
-        "builds ran Spark jobs but were memoized (missing "
-        f"note_data_computed at an action site): {missed}"
-    )
 
 
 _R15_NEW = (
