@@ -15,7 +15,6 @@ from oraaud_kafka_spark.functions.gzip_codec import (
     DEFAULT_THRESHOLD,
     GZIP_MAGIC,
     conditional_gzip,
-    gzip_compress,
     gzip_decompress,
     is_gzip,
 )
@@ -27,7 +26,8 @@ def test_gzip_roundtrip_spark(spark):
     df = spark.createDataFrame([(t,) for t in texts], ["value"])
     out = (
         df.withColumn("raw", F.encode("value", "utf-8"))
-        .withColumn("gz", gzip_compress(F.col("raw")))
+        # threshold -1: every value, the empty one too, is gzipped
+        .withColumn("gz", conditional_gzip(F.col("value"), -1))
         .withColumn("back", gzip_decompress(F.col("gz")))
         .withColumn("sniff_gz", is_gzip(F.col("gz")))
         .withColumn("sniff_raw", is_gzip(F.col("raw")))
@@ -46,33 +46,30 @@ def test_gzip_deterministic(spark):
     """mtime=0 => byte-identical output across invocations (needed for
     downstream dedup of at-least-once redeliveries)."""
     df = spark.createDataFrame([("payload " * 100,)], ["value"])
-    one = bytes(
-        df.select(gzip_compress(F.encode("value", "utf-8")).alias("g")).head().g
-    )
-    two = bytes(
-        df.select(gzip_compress(F.encode("value", "utf-8")).alias("g")).head().g
-    )
+    one = bytes(df.select(conditional_gzip(F.col("value"), -1).alias("g")).head().g)
+    two = bytes(df.select(conditional_gzip(F.col("value"), -1).alias("g")).head().g)
     assert one == two
     assert gzip.decompress(one) == ("payload " * 100).encode()
 
 
 def test_conditional_gzip_threshold(spark):
+    """Raw at or below the threshold, gzipped above it, NULL kept; the
+    gzip is level 6 (the JDK GZIPOutputStream default) with mtime=0."""
     small = "s" * 10
-    large = "L" * (DEFAULT_THRESHOLD + 1)
-    df = spark.createDataFrame([(small,), (large,)], ["value"])
-    rows = {
-        len(bytes(r.p)) and r.i: r
-        for i, r in enumerate(
-            df.withColumn("p", conditional_gzip(F.col("value"))).withColumn(
-                "i", F.monotonically_increasing_id()
-            ).collect()
-        )
-    }
+    at = "a" * DEFAULT_THRESHOLD
+    above = "b" * (DEFAULT_THRESHOLD + 1)
+    large = "L" + "<AuditRecord>x</AuditRecord>" * 100
+    df = spark.createDataFrame(
+        [(small,), (at,), (above,), (large,), (None,)], "value string"
+    )
     out = df.withColumn("p", conditional_gzip(F.col("value"))).collect()
-    by_val = {r.value[:1]: bytes(r.p) for r in out}
+    by_val = {r.value and r.value[:1]: r.p and bytes(r.p) for r in out}
     assert by_val["s"] == small.encode()  # below threshold: raw
-    assert by_val["L"][:2] == GZIP_MAGIC  # above: gzipped
-    assert gzip.decompress(by_val["L"]) == large.encode()
+    assert by_val["a"] == at.encode()  # 512 B: not above, raw
+    assert by_val["b"][:2] == GZIP_MAGIC  # 513 B: gzipped
+    assert gzip.decompress(by_val["b"]) == above.encode()
+    assert by_val["L"] == gzip.compress(large.encode(), compresslevel=6, mtime=0)
+    assert by_val[None] is None
 
 
 @settings(max_examples=200, deadline=None)

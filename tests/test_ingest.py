@@ -5,17 +5,20 @@ reference's R-3/R-5/R-8/R-9/R-10/R-15 semantics on the captured output.
 
 from __future__ import annotations
 
+import gzip
 import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from oraaud_kafka_spark.functions.gzip_codec import conditional_gzip
 from oraaud_kafka_spark.sources.audit_xml import complete_only, read_audit_batch
 from oraaud_kafka_spark.streaming.audit_parse import parse_audit_records
 from oraaud_kafka_spark.streaming.ingest import (
     IngestMetrics,
     build_ingest_stream,
+    kafka_records,
     kinesis_batch_writer,
     start_foreach_batch_sink,
 )
@@ -96,13 +99,21 @@ def test_batch_decoration_semantics(spark, tmp_path):
 def test_gate_ignores_trailing_line_breaks(spark, tmp_path):
     """A writer that ends the file with a newline (LF or CRLF, with
     stray spaces/tabs) has still finished it: the gate must pass it,
-    and still withhold a truncated file that ends in a newline."""
+    and still withhold a truncated file that ends in a newline. Only
+    spaces, tabs, CR and LF may follow the final ``</Audit>``: not
+    other text, a vertical tab or U+2028 (which Java's ``$`` would let
+    through), and a file cut short after an inner ``</Audit>`` is
+    withheld."""
     doc = _fix_ts(AUDIT_DOC.format(sid=9, eid=3, user="SYS"))
     files = {
         "orcl_ora_1_lf.xml": doc + "\n",
         "orcl_ora_2_crlf.xml": doc.replace("\n", "\r\n") + "\r\n",
         "orcl_ora_3_mixed.xml": doc + " \t\r\n\n",
         "orcl_ora_4_cut.xml": doc.rsplit("</Audit>", 1)[0] + "\n",
+        "orcl_ora_5_text.xml": doc + "x",
+        "orcl_ora_6_vtab.xml": doc + "\x0b",
+        "orcl_ora_7_lsep.xml": doc + "\u2028",
+        "orcl_ora_8_midcut.xml": doc + "\n" + doc[: len(doc) // 2],
     }
     for name, content in files.items():
         (tmp_path / name).write_bytes(content.encode())
@@ -113,7 +124,32 @@ def test_gate_ignores_trailing_line_breaks(spark, tmp_path):
         "orcl_ora_2_crlf.xml": True,
         "orcl_ora_3_mixed.xml": True,
         "orcl_ora_4_cut.xml": False,
+        "orcl_ora_5_text.xml": False,
+        "orcl_ora_6_vtab.xml": False,
+        "orcl_ora_7_lsep.xml": False,
+        "orcl_ora_8_midcut.xml": False,
     }
+
+
+def test_payload_bytes_of_malformed_utf8(spark, tmp_path):
+    """R-8 on bytes: a file with invalid UTF-8 (a Latin-1 ``caf\\xe9``,
+    a stray ``\\xff\\xfe``) and CRLF line ends ships each bad byte as
+    U+FFFD, as a JDK decode of the file does, with LF removed and CR
+    kept — the same bytes on the Kafka value and the Kinesis payload."""
+    (tmp_path / "orcl_ora_1_bad.xml").write_bytes(
+        b"<Audit>\r\n <R>caf\xe9</R>\r\n <S>\xff\xfe</S>\r\n</Audit>\r\n"
+    )
+    fffd = "\ufffd".encode()
+    expected = (
+        b"<Audit>\r <R>caf" + fffd + b"</R>\r <S>" + fffd * 2 + b"</S>\r</Audit>\r"
+    )
+    df = complete_only(read_audit_batch(spark, str(tmp_path), hostname="h"))
+    kafka = kafka_records(df).select(F.col("value").cast("binary").alias("v"))
+    assert bytes(kafka.head().v) == expected
+    zipped = df.select(conditional_gzip(F.col("value"), -1).alias("p")).head().p
+    assert gzip.decompress(bytes(zipped)) == expected
+    raw = df.select(conditional_gzip(F.col("value")).alias("p")).head().p
+    assert bytes(raw) == expected  # under 512 B: shipped raw
 
 
 def test_streaming_ingest_memory_sink(spark, tmp_path):
@@ -223,8 +259,6 @@ def test_foreach_batch_kinesis_style_sink(spark, tmp_path):
     }
     assert by_pid["22222"][:2] != b"\x1f\x8b"  # small: raw
     assert by_pid["11111"][:2] == b"\x1f\x8b"  # large: gzipped (R-11)
-    import gzip
-
     assert big_user.encode() in gzip.decompress(by_pid["11111"])
 
 
@@ -520,8 +554,6 @@ def test_kafka_sink_record_contract(spark, tmp_path):
     host:absolute_file, KafkaJob.java:47, has no ``file://``),
     value = whole file with newlines stripped (KafkaJob.java:60-80),
     incomplete files never shipped."""
-    from oraaud_kafka_spark.streaming.ingest import kafka_records
-
     make_corpus(tmp_path)
     captured = []
 
