@@ -83,7 +83,7 @@ def main(argv: list[str]) -> int:
     finally:
         print(
             f"files={metrics.files} bytes={metrics.bytes} "
-            f"batches={metrics.batches} total_batch_ms={metrics.total_batch_ms}",
+            f"batches={metrics.batches} phase_ms={metrics.phase_ms}",
             file=sys.stderr,
         )
     return 0

@@ -4,7 +4,9 @@ reference's ingest front half (SURVEY.md §2.1 R-1..R-10).
 Reference semantics -> Spark mapping:
 - WatchService loop + backlog scan (OraaudKafka.java:79-131,
   CommonJobSingleton.java:85-96) -> one file source; each micro-batch
-  lists new files, the first batch includes pre-existing ones.
+  lists new files, the first batch includes pre-existing ones, and
+  ``getBatch`` re-stats the batch's admitted files on the driver
+  (``session.get_spark`` keeps every listing off the executors).
 - ``*.xml`` suffix filter (OraaudKafka.java:114) -> pathGlobFilter.
 - whole-file read, newline-strip (KafkaJob.java:49-57, the commented-out
   append("\\n") at :54) -> wholetext=true + make_valid_utf8 + replace.

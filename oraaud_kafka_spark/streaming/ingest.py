@@ -18,7 +18,7 @@ reference's ack-then-delete.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -377,12 +377,14 @@ def run_from_config(
 class IngestMetrics(StreamingQueryListener):
     """R-16: the CommonJobMgmt MBean counters (files, bytes, elapsed ms)
     fed from the observe() node + progress events instead of JMX
-    (CommonJobMgmt.java:19-72)."""
+    (CommonJobMgmt.java:19-72). ``phase_ms`` sums each ``durationMs``
+    phase over all batches (``getBatch``, ``addBatch``, ``walCommit``,
+    ...); its ``triggerExecution`` entry is the total batch time."""
 
     files: int = 0
     bytes: int = 0
     batches: int = 0
-    total_batch_ms: float = 0.0
+    phase_ms: dict[str, int] = field(default_factory=dict)
 
     def onQueryStarted(self, event) -> None:
         pass
@@ -394,9 +396,8 @@ class IngestMetrics(StreamingQueryListener):
             self.files += obs["files"] or 0
             self.bytes += obs["bytes"] or 0
         self.batches += 1
-        duration = (progress.durationMs or {}).get("triggerExecution")
-        if duration:
-            self.total_batch_ms += duration
+        for phase, ms in (progress.durationMs or {}).items():
+            self.phase_ms[phase] = self.phase_ms.get(phase, 0) + ms
 
     def onQueryIdle(self, event) -> None:
         pass

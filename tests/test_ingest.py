@@ -184,8 +184,36 @@ def test_streaming_ingest_memory_sink(spark, tmp_path):
             time.sleep(0.2)
         assert metrics.files == 1
         assert metrics.bytes == len(row.value.encode())
+        # every durationMs phase summed, the batch total among them
+        assert {"getBatch", "addBatch", "triggerExecution"} <= set(metrics.phase_ms)
     finally:
         spark.streams.removeListener(metrics)
+
+
+def test_wide_batch_lists_on_the_driver(spark, tmp_path):
+    """A micro-batch of more files than Spark's parallel-discovery
+    threshold (32) re-lists them in getBatch on the driver, not as a
+    Spark job of one task per file. The query runs its jobs in a job
+    group named by its runId; with a sink that runs no action, the only
+    job it could run is that listing."""
+    doc = _fix_ts(AUDIT_DOC.format(sid=1, eid=1, user="SCOTT"))
+    for i in range(40):
+        (tmp_path / f"orcl_ora_{1000 + i}_0001.xml").write_text(doc)
+    q = start_foreach_batch_sink(
+        build_ingest_stream(spark, str(tmp_path), hostname="h", clean_source=None),
+        lambda batch_df, _: None,
+        checkpoint_dir=str(tmp_path / "_ckpt"),
+        available_now=True,
+    )
+    try:
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        # the status store is fed from the listener bus asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = spark.sparkContext.statusTracker()
+        assert tracker.getJobIdsForGroup(str(q.runId)) == []
+    finally:
+        q.stop()
 
 
 def test_streaming_backlog_then_new_file(spark, tmp_path):
