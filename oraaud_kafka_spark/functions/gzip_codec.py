@@ -9,6 +9,12 @@ default of the JDK ``GZIPOutputStream`` that GzipUtil wraps (Python's
 with mtime=0 so output bytes are deterministic — required for
 at-least-once dedup downstream.
 
+Speed: besides deflate, every task of this UDF used to pay ~100 ms of
+zip-directory re-reads in PySpark's worker; ``get_spark``'s engine
+worker daemon removes them (``session``'s docstring). ``conditional_gzip``
+over 21 MB of cached ~1 MB values, medians of 9 warm ``noop`` writes on
+a 4-core ``local[4]``: 312 -> 238 ms (67 -> 88 MB/s).
+
 The Kafka path does NOT use these: wire compression is the producer's
 ``compression.type=gzip`` pass-through (KafkaSingleton.java:108-114 →
 option("kafka.compression.type", "gzip")). These UDFs implement the

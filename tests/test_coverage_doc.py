@@ -17,14 +17,9 @@ from oraaud_kafka_spark import registry
 ROOT = Path(__file__).resolve().parent.parent
 DOC = ROOT / "COVERAGE.md"
 
-# Library names that only tests use, kept on purpose: the tested
-# streaming-analytics kit (SURVEY.md §2.2) and the gzip decoder pair
-# that is the R-12 reference for conditional_gzip's output.
+# Library names that only tests use, kept on purpose: the gzip decoder
+# pair that is the R-12 reference for conditional_gzip's output.
 TEST_ONLY_ALLOWED = {
-    "tumbling_counts",
-    "streaming_dedup",
-    "stream_static_enrich",
-    "stream_stream_join",
     "gzip_decompress",
     "is_gzip",
 }

@@ -1,209 +1,11 @@
-"""Streaming analytics semantics tests (SURVEY.md §5.2 item 4):
-watermarked windows, streaming dedup, stream-static and stream-stream
-joins, checkpointed restart (at-least-once, no file lost), and the
-document pipeline run unchanged under Structured Streaming.
-
-Micro-batch boundaries are forced with maxFilesPerTrigger=1 so state
-crosses batches the way it would across real triggers.
+"""Structured Streaming semantics tests (SURVEY.md §5.2 item 4):
+checkpointed restart (at-least-once, no file lost) and the document
+pipeline run unchanged under Structured Streaming.
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from oraaud_kafka_spark.streaming.analytics import (
-    stream_static_enrich,
-    stream_stream_join,
-    streaming_dedup,
-    tumbling_counts,
-)
-
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-    ]
-)
-
-
-def _write_jsonl(path, rows):
-    path.write_text("\n".join(json.dumps(r) for r in rows))
-
-
-def _stream_json(spark, d, schema, **opts):
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    return reader.json(str(d))
-
-
-def _run_to_memory(df, name, output_mode="append"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
-def test_tumbling_append_emits_closed_windows(spark, tmp_path):
-    d = tmp_path / "ev"
-    d.mkdir()
-    # batch 1: five events inside 10:00-10:10; batch 2 advances event time
-    # to 12:00 (watermark 11:50 closes batch-1 windows); batch 3 advances
-    # again so batch 2's window also closes. The 14:00 window stays
-    # pending — exactly append-mode watermark semantics.
-    _write_jsonl(
-        d / "a.json",
-        [
-            {"event_id": i, "ts": f"2024-05-04 10:0{i}:00", "user_id": 1, "event_type": "view"}
-            for i in range(5)
-        ],
-    )
-    _write_jsonl(
-        d / "b.json",
-        [{"event_id": 10, "ts": "2024-05-04 12:00:00", "user_id": 1, "event_type": "view"}],
-    )
-    _write_jsonl(
-        d / "c.json",
-        [{"event_id": 11, "ts": "2024-05-04 14:00:00", "user_id": 1, "event_type": "view"}],
-    )
-    stream = _stream_json(spark, d, EVENT_SCHEMA)
-    q = _run_to_memory(
-        tumbling_counts(stream, "ts", "5 minutes", delay="10 minutes"), "tumble"
-    )
-    try:
-        rows = {
-            (r.start.strftime("%H:%M"), r.n)
-            for r in spark.table("tumble").collect()
-        }
-        assert rows == {("10:00", 5), ("12:00", 1)}
-    finally:
-        q.stop()
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    d = tmp_path / "dup"
-    d.mkdir()
-    base = {"ts": "2024-05-04 10:00:00", "user_id": 1, "event_type": "view"}
-    _write_jsonl(d / "a.json", [dict(base, event_id=1), dict(base, event_id=1)])
-    _write_jsonl(d / "b.json", [dict(base, event_id=1), dict(base, event_id=2)])
-    stream = _stream_json(spark, d, EVENT_SCHEMA)
-    q = _run_to_memory(
-        streaming_dedup(stream, ["event_id"], ts_col="ts", delay="1 hour"), "dedup"
-    )
-    try:
-        ids = sorted(r.event_id for r in spark.table("dedup").collect())
-        # duplicate event 1 (within-batch AND cross-batch) collapses
-        assert ids == [1, 2]
-    finally:
-        q.stop()
-
-
-def test_stream_static_enrich_broadcasts(spark, tmp_path):
-    d = tmp_path / "enrich"
-    d.mkdir()
-    _write_jsonl(
-        d / "a.json",
-        [
-            {"event_id": 1, "ts": "2024-05-04 10:00:00", "user_id": 7, "event_type": "view"},
-            {"event_id": 2, "ts": "2024-05-04 10:01:00", "user_id": 8, "event_type": "click"},
-        ],
-    )
-    dim = spark.createDataFrame([(7, "gold"), (8, "basic")], "user_id long, tier string")
-    stream = _stream_json(spark, d, EVENT_SCHEMA)
-    q = _run_to_memory(stream_static_enrich(stream, dim, "user_id"), "enriched")
-    try:
-        tiers = {r.event_id: r.tier for r in spark.table("enriched").collect()}
-        assert tiers == {1: "gold", 2: "basic"}
-    finally:
-        q.stop()
-
-
-def test_stream_static_enrich_unhinted_for_growing_dims(spark, tmp_path):
-    """broadcast_dim=False must produce the same enrichment without the
-    forced hint — the scale path for dimensions that grow with the data
-    (the planner then sizes the join itself)."""
-    d = tmp_path / "enrich_nohint"
-    d.mkdir()
-    _write_jsonl(
-        d / "a.json",
-        [
-            {"event_id": 1, "ts": "2024-05-04 10:00:00", "user_id": 7, "event_type": "view"},
-            {"event_id": 2, "ts": "2024-05-04 10:01:00", "user_id": 8, "event_type": "click"},
-        ],
-    )
-    dim = spark.createDataFrame([(7, "gold"), (8, "basic")], "user_id long, tier string")
-    stream = _stream_json(spark, d, EVENT_SCHEMA)
-    joined = stream_static_enrich(stream, dim, "user_id", broadcast_dim=False)
-    assert "ResolvedHint" not in joined._jdf.queryExecution().analyzed().toString()
-    q = _run_to_memory(joined, "enriched_nohint")
-    try:
-        tiers = {r.event_id: r.tier for r in spark.table("enriched_nohint").collect()}
-        assert tiers == {1: "gold", 2: "basic"}
-    finally:
-        q.stop()
-
-
-def test_stream_stream_join_time_bounded(spark, tmp_path):
-    left_d, right_d = tmp_path / "l", tmp_path / "r"
-    left_d.mkdir(), right_d.mkdir()
-    _write_jsonl(
-        left_d / "a.json",
-        [
-            {"event_id": 1, "ts": "2024-05-04 10:00:00", "user_id": 1, "event_type": "click"},
-            {"event_id": 2, "ts": "2024-05-04 10:30:00", "user_id": 2, "event_type": "click"},
-        ],
-    )
-    _write_jsonl(
-        right_d / "a.json",
-        [
-            # within 5 min of click 1 -> matches
-            {"event_id": 11, "ts": "2024-05-04 10:02:00", "user_id": 1, "event_type": "purchase"},
-            # 40 min after click 2 -> outside the bound
-            {"event_id": 12, "ts": "2024-05-04 11:10:00", "user_id": 2, "event_type": "purchase"},
-        ],
-    )
-    left = _stream_json(spark, left_d, EVENT_SCHEMA).select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("l_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    right = _stream_json(spark, right_d, EVENT_SCHEMA).select(
-        F.col("event_id").alias("buy_id"),
-        F.col("user_id").alias("r_user"),
-        F.col("ts").alias("buy_ts"),
-    )
-    joined = stream_stream_join(
-        left,
-        right,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("buy_ts") >= F.col("click_ts"))
-        & (F.col("buy_ts") <= F.col("click_ts") + F.expr("INTERVAL 5 MINUTES")),
-        left_ts="click_ts",
-        right_ts="buy_ts",
-        delay="1 hour",
-    )
-    q = _run_to_memory(joined, "ssj")
-    try:
-        pairs = {(r.click_id, r.buy_id) for r in spark.table("ssj").collect()}
-        assert pairs == {(1, 11)}
-    finally:
-        q.stop()
 
 
 def test_checkpoint_restart_no_loss_no_dup(spark, tmp_path):
