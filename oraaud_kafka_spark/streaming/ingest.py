@@ -14,6 +14,14 @@ One streaming query replaces the reference's four thread pools:
 Delivery contract preserved (SURVEY.md §3.4): at-least-once, no file
 shipped truncated, duplicates possible on redelivery — identical to the
 reference's ack-then-delete.
+
+Each micro-batch commits three checkpoint files: the file-source log,
+the offset WAL and the commit log. Spark writes them through the
+checkpoint manager the session names. On a ``local`` master
+``session.get_spark`` picks Spark's
+``FileSystemBasedCheckpointFileManager``: a temp file renamed into place
+with one atomic ``rename(2)``, refusing to overwrite an existing batch
+file. A cluster master keeps Spark's default FileContext manager.
 """
 
 from __future__ import annotations

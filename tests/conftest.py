@@ -25,3 +25,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def registry_builds(monkeypatch) -> list:
+    """The query functions registry.query runs on a memo miss while a
+    test runs, in call order."""
+    from oraaud_kafka_spark import registry
+
+    builds: list = []
+    build = registry._build
+
+    def counting(fn, spark, sf_dir):
+        builds.append(fn)
+        return build(fn, spark, sf_dir)
+
+    monkeypatch.setattr(registry, "_build", counting)
+    return builds

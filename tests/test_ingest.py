@@ -7,6 +7,10 @@ from __future__ import annotations
 
 import gzip
 import os
+import shutil
+import subprocess
+import sys
+import textwrap
 import time
 
 import pytest
@@ -328,6 +332,98 @@ def test_clean_source_delete_after_commit(spark, tmp_path):
         assert (tmp_path / "notes.txt").exists()
     finally:
         q.stop()
+
+
+def test_drain_forks_no_readlink(tmp_path):
+    """A micro-batch commits three checkpoint files (source log, offset
+    WAL, commit log). Without libhadoop, Spark's default checkpoint
+    manager renames each through a link-status query that forks
+    ``readlink`` 8 times; the session's manager renames with one
+    ``rename(2)``. Logging ``readlink``/``chmod`` shims first on the
+    JVM's PATH count the forks of one drain."""
+    shims, log = tmp_path / "shims", tmp_path / "forks.log"
+    shims.mkdir()
+    for tool in ("readlink", "chmod"):
+        shim = shims / tool
+        shim.write_text(f'#!/bin/sh\necho {tool} >> "{log}"\nexec {shutil.which(tool)} "$@"\n')
+        shim.chmod(0o755)
+    watched = tmp_path / "in"
+    watched.mkdir()
+    doc = _fix_ts(AUDIT_DOC.format(sid=1, eid=1, user="SCOTT"))
+    for i in range(4):
+        (watched / f"orcl_ora_{i}_0001.xml").write_text(doc)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from oraaud_kafka_spark.session import get_spark
+        from oraaud_kafka_spark.streaming.ingest import (
+            build_ingest_stream, start_foreach_batch_sink)
+
+        spark = get_spark(app_name="fork-count", master="local[1]")
+        open({str(log)!r}, "w").close()  # count the drain's forks only
+        shipped = []
+        q = start_foreach_batch_sink(
+            build_ingest_stream(spark, {str(watched)!r}, hostname="h", clean_source=None),
+            lambda b, _: shipped.extend(b.select("key").collect()),
+            checkpoint_dir={str(tmp_path / "ckpt")!r}, available_now=True)
+        q.awaitTermination(120)
+        q.stop()
+        print("SHIPPED", len(shipped))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PATH"] = f"{shims}{os.pathsep}{env['PATH']}"
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True, timeout=300
+    )
+    assert "SHIPPED 4" in out.stdout, out.stderr[-3000:]
+    forks = log.read_text().split()
+    assert "chmod" in forks  # the shims are on the JVM's PATH
+    assert "readlink" not in forks, forks
+
+
+def test_checkpoint_of_the_default_manager_resumes(spark, tmp_path):
+    """A checkpoint written by Spark's default (FileContext) checkpoint
+    manager resumes under the session's FileSystem manager: the files it
+    committed are not re-shipped, and a file added while down ships."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    session_manager = spark.conf.get(key)
+    watched = tmp_path / "in"
+    watched.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    doc = _fix_ts(AUDIT_DOC.format(sid=1, eid=1, user="SCOTT"))
+    (watched / "orcl_ora_1_0001.xml").write_text(doc)
+    (watched / "orcl_ora_2_0002.xml").write_text(doc)
+    shipped: list[str] = []
+
+    def run_once():
+        q = start_foreach_batch_sink(
+            build_ingest_stream(spark, str(watched), hostname="h", clean_source=None),
+            lambda b, _: shipped.extend(r.src_file.rsplit("/", 1)[-1] for r in b.collect()),
+            checkpoint_dir=ckpt,
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        q.stop()
+        assert q.exception() is None
+
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        run_once()
+    finally:
+        spark.conf.set(key, session_manager)
+    assert sorted(shipped) == ["orcl_ora_1_0001.xml", "orcl_ora_2_0002.xml"]
+
+    (watched / "orcl_ora_3_0003.xml").write_text(doc)
+    run_once()
+    assert shipped[2:] == ["orcl_ora_3_0003.xml"]
 
 
 def test_audit_parse_typed_rows(spark, tmp_path):

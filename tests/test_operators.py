@@ -114,12 +114,13 @@ def test_spread_is_noop_on_wide_input(spark):
     assert spread(narrow, partitions=8).rdd.getNumPartitions() == 8
 
 
-def test_registry_plan_cache_per_session_and_dir(spark):
-    """Registered callables memoize the built DataFrame per
-    (session, sf_dir): same key returns the identical plan object (no
-    rebuild), different sf_dir builds a distinct plan against the other
-    fixture set. The first build in a cold session loads lineitem,
-    whose parquet schema job keeps that one build out of the memo."""
+def test_registry_plan_cache_per_session_and_dir(spark, registry_builds):
+    """Registered callables memoize the built plan per (session,
+    sf_dir): a repeat call with the same key returns a new DataFrame
+    over that plan without rebuilding it, and a different sf_dir runs
+    its own plan against the other fixture set. The first build in a
+    cold session loads lineitem, whose parquet schema job keeps that one
+    build out of the memo."""
     from oraaud_kafka_spark import registry
 
     from .conftest import SF_DIR, SF_DIR_CORRECTNESS
@@ -128,11 +129,42 @@ def test_registry_plan_cache_per_session_and_dir(spark):
     fn = registry.QUERIES["q1_pricing_summary"]
     fn(spark, SF_DIR)
     a = fn(spark, SF_DIR)
+    built = len(registry_builds)
     b = fn(spark, SF_DIR)
+    assert len(registry_builds) == built
+    assert a is not b
     c = fn(spark, SF_DIR_CORRECTNESS)
-    assert a is b
-    assert a is not c
-    assert a.count() >= 0 and c.count() >= 0  # both plans executable
+    assert a.collect() == b.collect() != c.collect()
+
+
+def test_registry_memo_hit_runs_the_full_query(spark, registry_builds):
+    """Every call of a memoized query plans and runs afresh: two calls'
+    collects run the same number of Spark jobs. A memo that handed back
+    one DataFrame gave the second collect the first one's finalized
+    adaptive plan and its shuffle output (3 jobs, then 1)."""
+    from oraaud_kafka_spark import registry
+
+    from .conftest import SF_DIR
+
+    registry.load_all()
+    fn = registry.QUERIES["q1_pricing_summary"]
+    fn(spark, SF_DIR)
+    fn(spark, SF_DIR)
+    built = len(registry_builds)
+    sc = spark.sparkContext
+    jobs = []
+    for i in range(2):
+        group = f"memo-hit-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(spark, SF_DIR).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        # the status store is fed from the listener bus asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert len(registry_builds) == built  # both calls were memo hits
+    assert jobs[0] == jobs[1] > 1, jobs
 
 
 def test_fimg_decode_round_trip_and_codec_gate():

@@ -41,11 +41,9 @@ def _plan(df, execute: bool = False) -> str:
         # QueryExecution so its adaptive plan mutates to final
         df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # Once a memoized DataFrame has been executed (by THIS test or any
-    # earlier one sharing the session — registry.query caches plans), the
-    # finalized AdaptiveSparkPlan prints the final plan AND an
-    # "== Initial Plan ==" section, duplicating every operator line and
-    # breaking count-based pins order-dependently. Keep the final plan.
+    # Once executed, the finalized AdaptiveSparkPlan prints the final
+    # plan AND an "== Initial Plan ==" section, duplicating every
+    # operator line and breaking count-based pins. Keep the final plan.
     return plan.split("== Initial Plan ==")[0]
 
 
@@ -155,7 +153,6 @@ def test_centroids_partial_aggregate_before_exchange(spark):
 def test_sample_stratified_no_preorder_shuffle(spark):
     """Hash sampling is a pure scan-filter before its output sort: exactly
     one Exchange (the deterministic ORDER BY), nothing upstream of it."""
-    # fresh plan: the memoized DataFrame may already be AQE-finalized
     df = registry.QUERIES["q_sample_stratified"].__wrapped__(spark, SF_DIR)
     plan = _plan(df)
     assert plan.count("Exchange") == 1
@@ -170,7 +167,6 @@ def test_profile_table_no_expand_and_column_pruned_scans(spark):
     ~2x the profiled columns, not n_cols full passes (and the legs run
     as independent back-fillable jobs, guide §2.6). Measured 0.92 s ->
     0.50 s at sf0.1."""
-    # fresh plan: the memoized DataFrame may already be AQE-finalized
     df = registry.QUERIES["q_profile_table"].__wrapped__(spark, SF_DIR)
     plan = _plan(df)
     assert "Expand" not in plan
@@ -188,7 +184,6 @@ def test_profile_table_no_expand_and_column_pruned_scans(spark):
 
 
 def test_pack_chunked_single_scan_single_window(spark):
-    # fresh plan: the memoized DataFrame may already be AQE-finalized
     df = registry.QUERIES["q_pack_chunked"].__wrapped__(spark, SF_DIR)
     plan = _plan(df)
     assert plan.count("Scan parquet") == 1
@@ -1128,10 +1123,9 @@ def test_range_search_pair_join_is_blocked_equi_join(spark):
     assert len(bnl) <= 2
     assert all("Cross" in ln for ln in bnl)
     # the pair join itself is an equi-join on the triangle cell key —
-    # statically a SortMergeJoin; once AQE finalizes (a prior test may
-    # have executed the memoized plan) the tiny fixture side demotes it
-    # to a broadcast HASH join, still keyed on __cell, never a pair
-    # expansion
+    # statically a SortMergeJoin; once AQE finalizes, the tiny fixture
+    # side demotes it to a broadcast HASH join, still keyed on __cell,
+    # never a pair expansion
     assert any(
         f"{kind} [__cell" in plan
         for kind in (

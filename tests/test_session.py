@@ -1,8 +1,11 @@
-"""The session factory's Python-worker daemon (``session.get_spark``,
-``oraaud_kafka_spark/_pydaemon.py``): zip directories are re-read only
-when their archive changed, the workers of the test session run that
-guard, the daemon starts from any working directory, and a cluster
-master keeps Spark's stock daemon."""
+"""The session factory's local-master settings (``session.get_spark``).
+The Python-worker daemon (``oraaud_kafka_spark/_pydaemon.py``): zip
+directories are re-read only when their archive changed, the workers of
+the test session run that guard, the daemon starts from any working
+directory, and a cluster master keeps Spark's stock daemon. The
+streaming checkpoint manager: a local master writes checkpoints through
+Spark's FileSystem manager, which still refuses to overwrite a batch
+file, and a cluster master keeps Spark's default."""
 
 from __future__ import annotations
 
@@ -16,6 +19,8 @@ import zipimport
 
 import pandas as pd
 import pytest
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
@@ -23,6 +28,7 @@ from oraaud_kafka_spark import _pydaemon
 from oraaud_kafka_spark.session import get_spark
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="the guard is a no-op on 3.13+")
@@ -124,3 +130,41 @@ def test_cluster_master_keeps_the_stock_daemon(monkeypatch):
     cluster = get_spark(master="spark://graft-master:7077")
     assert "spark.python.daemon.module" not in cluster
     assert "spark.executorEnv.PYTHONPATH" not in cluster
+
+
+def test_local_master_writes_checkpoints_through_the_file_system_manager(monkeypatch):
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    assert get_spark(master="local[2]")[CHECKPOINT_MANAGER] == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert CHECKPOINT_MANAGER not in get_spark(master="spark://graft-master:7077")
+
+
+def test_checkpoint_manager_refuses_to_overwrite_a_batch_file(spark, tmp_path):
+    """The manager a streaming query gets from the session's Hadoop
+    conf is the FileSystem one, and its atomic write still refuses an
+    existing batch file, which HDFSMetadataLog reads as a concurrent
+    update."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    batch = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    manager = checkpointing.CheckpointFileManager.create(
+        batch.getParent(), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    def write(body: bytes) -> None:
+        out = manager.createAtomic(batch, False)
+        out.write(bytearray(body))
+        out.close()
+
+    write(b"first")
+    with pytest.raises(Py4JJavaError) as err:
+        write(b"second")
+    assert is_instance_of(
+        spark.sparkContext._gateway,
+        err.value.java_exception,
+        "org.apache.hadoop.fs.FileAlreadyExistsException",
+    )
+    assert (tmp_path / "0").read_bytes() == b"first"
