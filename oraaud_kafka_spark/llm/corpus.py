@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, spread
+from ..tables import load
 
 # Hash-mod split: md5 of the doc id, first 6 hex digits -> 24-bit int,
 # mod 100. 80/10/10 train/val/test. Same hex-parse trick as llm.dedup
@@ -202,8 +202,6 @@ ORDER BY source_a, source_b
 @query("q_corpus_overlap_matrix", oracle=_OVERLAP_ORACLE)
 def q_corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    # NOT spread (round-15 honest A/B: 1.07 s with vs 0.80 s without —
-    # shuffling the token arrays costs more than the span-hash map)
     t = d.select("source", F.split("text", " ").alias("toks"))
     n_spans = F.ceil(F.size("toks") / F.lit(float(_OVERLAP_W))).cast("int")
     span_hashes = F.transform(
@@ -363,7 +361,7 @@ def importance_scores(
 def q_sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    d = spread(load(spark, sf_dir, "documents"))
+    d = load(spark, sf_dir, "documents")
     scored = importance_scores(d, _DSIR_TARGET_SOURCE, _DSIR_N_BUCKETS)
     top = scored.orderBy(F.col("affinity_score").desc(), "doc_id").limit(
         _DSIR_TOP_K
@@ -859,10 +857,8 @@ def q_emb_whiten_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND the whitening join, but the posexplode component stream is
     # cheap to re-derive next to the checkpoint round-trip + the
     # per-invocation rebuild a data-computing build forces.
-    comp = (
-        spread(e)
-        .select("vec_id", F.posexplode("embedding").alias("dim", "xf"))
-        .select("vec_id", "dim", F.col("xf").cast("double").alias("x"))
+    comp = e.select("vec_id", F.posexplode("embedding").alias("dim", "xf")).select(
+        "vec_id", "dim", F.col("xf").cast("double").alias("x")
     )
     n = F.count("*").cast("double")
     s1 = (

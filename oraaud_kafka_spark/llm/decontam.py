@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, spread
+from ..tables import load
 
 BENCH_SOURCE = "src0"
 # contaminated when >= 1/5 of a doc's distinct shingles appear in the bench set
@@ -59,10 +59,7 @@ ORDER BY doc_id
 @query("q_decontaminate", oracle=_DECONTAM_ORACLE)
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    # spread BEFORE the shingle projection: the per-doc shingle transform
-    # is the expensive stage, so parallelism must be recovered ahead of
-    # it, not after the explode (no-op on a well-split scan at scale).
-    tokenized = spread(
+    tokenized = (
         d.select(
             "doc_id", "lang", "source", F.split("text", " ").alias("toks")
         ).filter(F.size("toks") >= 3)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..operators.triangle import triangle_self_join
 from ..queries import directional, dot, norm, sql_directional_cte, sql_dot, sql_norm
 from ..registry import query
-from ..tables import CAL_SLICE_K, cal_slice, load, materialize, spread, sql_cal_key
+from ..tables import CAL_SLICE_K, cal_slice, load, materialize, sql_cal_key
 
 _EXACT_ORACLE = """
 SELECT count(*) AS n_docs,
@@ -215,7 +215,7 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split() referenced from inside the transform() lambda is
     # re-evaluated per element (O(tokens^2) per doc — measured 8x slower
     # at sf0.1). slice+array_join builds each shingle in one pass.
-    tokenized = spread(
+    tokenized = (
         d.select("doc_id", F.split("text", " ").alias("toks")).filter(
             F.size("toks") >= 3
         )
@@ -539,7 +539,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT checkpointed (round-14 A/B): tokenize-distinct is cheap
     # relative to serializing the token arrays — materializing measured
     # 0.86 -> 1.67 s, the opposite of the md5-shingle queries
-    t = spread(
+    t = (
         d.select(
             "doc_id",
             "lang",
@@ -619,8 +619,8 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_semantic (SemDeDup quantizer clusters) — same pair-predicate
     discipline, honest candidate generation."""
     e = directional(load(spark, sf_dir, "embeddings"))
-    a = spread(
-        e.select(F.col("vec_id").alias("vec_a"), "label", F.col("embedding").alias("va"))
+    a = e.select(
+        F.col("vec_id").alias("vec_a"), "label", F.col("embedding").alias("va")
     )
     b = e.select(
         F.col("vec_id").alias("vec_b"), "label", F.col("embedding").alias("vb")
@@ -705,7 +705,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster scale pass materialize a checkpoint_dir so the O(corpus)
     # blocks go to fault-tolerant storage.
     bucketed = (
-        spread(e.select("vec_id", "embedding"))
+        e.select("vec_id", "embedding")
         .select("vec_id", "embedding", bucket)
         .transform(materialize)
     )
@@ -885,7 +885,7 @@ ORDER BY doc_a, doc_b
 @query("q_dedup_minhash_eval", oracle=_MINHASH_EVAL_ORACLE)
 def q_dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    tokenized = spread(
+    tokenized = (
         d.select("doc_id", F.split("text", " ").alias("toks")).filter(
             F.size("toks") >= 3
         )
@@ -1042,7 +1042,7 @@ def q_dedup_minhash_multiband_eval(
     from ..operators.triangle import triangle_self_join
 
     d = cal_slice(load(spark, sf_dir, "documents"), "doc_id")
-    keyed = spread(
+    keyed = (
         d.select("doc_id", "lang", F.split("text", " ").alias("toks"))
         .filter(F.size("toks") >= 3)
         # distinct shingles: the Jaccard ground truth is set-based, and
@@ -1256,7 +1256,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
     return semantic_dedup(
-        spread(e.select("vec_id", "embedding")), centroids, _SEM_THRESHOLD
+        e.select("vec_id", "embedding"), centroids, _SEM_THRESHOLD
     )
 
 
@@ -1319,7 +1319,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.array_join(F.slice(F.col("toks"), i, 3), " "),
         )
     )
-    keyed = spread(
+    keyed = (
         d.select("doc_id", "lang", toks.alias("toks"))
         .filter(F.size("toks") >= 3)
         .select("doc_id", "lang", shingles.alias("shs"))
@@ -1438,7 +1438,7 @@ def q_dedup_containment_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.array_join(F.slice(F.col("toks"), i, 3), " "),
         )
     )
-    keyed = spread(
+    keyed = (
         d.select("doc_id", "lang", toks.alias("toks"))
         .filter(F.size("toks") >= 3)
         .select("doc_id", "lang", shingles.alias("shs"))
@@ -1567,7 +1567,7 @@ def q_dedup_containment_multiband(
             lambda i: F.array_join(F.slice(F.col("toks"), i, 3), " "),
         )
     )
-    keyed = spread(
+    keyed = (
         d.select("doc_id", "lang", toks.alias("toks"))
         .filter(F.size("toks") >= 3)
         .select("doc_id", "lang", shingles.alias("shs"))
@@ -1712,7 +1712,7 @@ def mh_signature_table(docs: DataFrame) -> DataFrame:
     schema for cross-run dedup. Pure per-doc expressions (one md5 per
     shingle, zero shuffles); docs with < 3 tokens carry no signature
     and are absent (they cannot near-dup under word-3-gram shingling)."""
-    tokenized = spread(
+    tokenized = (
         docs.select("doc_id", F.split("text", " ").alias("toks")).filter(
             F.size("toks") >= 3
         )

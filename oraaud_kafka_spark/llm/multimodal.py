@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import bounded_sort, load, spread
+from ..tables import bounded_sort, load
 
 THUMB_BYTES = 8
 
@@ -763,11 +763,7 @@ def q_multimodal_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # single-eval barrier: bounds (one md5 per byte position) must be
     # computed exactly once per row — see _cdc_chunks docstring.
-    # One md5 PER BYTE is by far the heaviest map stage in the roster
-    # and the local single-row-group scan serves it as ONE task: widen
-    # the two needed columns first (spread is a no-op on a real
-    # multi-split table).
-    bounded = spread(d.select("doc_id", "text")).select(
+    bounded = d.select(
         "doc_id",
         "text",
         F.explode(

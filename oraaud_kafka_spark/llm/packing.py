@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, spread
+from ..tables import load
 
 BUDGET = 512
 
@@ -127,9 +127,7 @@ def q_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is linear. For corpora where one language dominates, pre-split
     the stratum (e.g. on a hash prefix) before packing."""
     d = load(spark, sf_dir, "documents")
-    t = spread(
-        d.select("doc_id", "lang", F.size(F.split("text", " ")).alias("n_toks"))
-    )
+    t = d.select("doc_id", "lang", F.size(F.split("text", " ")).alias("n_toks"))
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..queries import directional, dot, norm, sql_directional_cte, sql_dot, sql_norm
 from ..registry import query
-from ..tables import CAL_SLICE_K, cal_slice, load, spread, sql_cal_key
+from ..tables import CAL_SLICE_K, cal_slice, load, sql_cal_key
 
 N_QUERIES = 10
 TOP_K = 5
@@ -59,8 +59,8 @@ def q_sim_cosine_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
         .withColumn("qnorm", norm(F.col("qv")))
     )
-    corpus = spread(
-        e.select(F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv"))
+    corpus = e.select(
+        F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv")
     ).withColumn("nnorm", norm(F.col("nv")))
     scored = (
         F.broadcast(q)
@@ -125,7 +125,7 @@ def q_sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("aid"), F.col("embedding").alias("av"))
     )
     with_anchor = F.broadcast(anchors).crossJoin(
-        spread(e.select("vec_id", "label", "embedding"))
+        e.select("vec_id", "label", "embedding")
     )
     bucketed = (
         with_anchor.withColumn(
@@ -285,7 +285,7 @@ def _ivf_assign(e: DataFrame, centroids: DataFrame, keep: int, id_alias: str) ->
     # unchanged.
     cents = F.broadcast(centroids.withColumn("cnorm", norm(F.col("cv"))))
     ranked = (
-        spread(e).withColumn("enorm", norm(F.col("embedding")))
+        e.withColumn("enorm", norm(F.col("embedding")))
         .crossJoin(cents)
         .withColumn(
             "ccos",
@@ -556,8 +556,8 @@ def q_rag_retrieve_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
         .withColumn("qnorm", norm(F.col("qv")))
     )
-    corpus = spread(
-        e.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("nv"))
+    corpus = e.select(
+        F.col("vec_id").alias("doc_id"), F.col("embedding").alias("nv")
     ).withColumn("nnorm", norm(F.col("nv")))
     scored = (
         F.broadcast(q)
@@ -647,11 +647,11 @@ def q_sim_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("qnorm", norm(F.col("qv")))
     )
-    corpus = spread(
-        e.filter(F.col("vec_id") >= N_QUERIES).select(
-            F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv")
-        )
-    ).withColumn("nnorm", norm(F.col("nv")))
+    corpus = (
+        e.filter(F.col("vec_id") >= N_QUERIES)
+        .select(F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv"))
+        .withColumn("nnorm", norm(F.col("nv")))
+    )
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -758,8 +758,8 @@ def q_sim_mips_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < _MIPS_NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    corpus = spread(
-        e.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("nv"))
+    corpus = e.select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("nv")
     ).crossJoin(m)
     # augmented corpus vector: nv ++ [sqrt(mx2 - |nv|^2)]; the query's
     # augmented form is qv ++ [0], so the augmented dot's final fold
@@ -900,11 +900,11 @@ def q_eval_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("qnorm", norm(F.col("qv")))
     )
-    corpus = spread(
-        e.filter(F.col("vec_id") >= N_QUERIES).select(
-            F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv")
-        )
-    ).withColumn("nnorm", norm(F.col("nv")))
+    corpus = (
+        e.filter(F.col("vec_id") >= N_QUERIES)
+        .select(F.col("vec_id").alias("nid"), "label", F.col("embedding").alias("nv"))
+        .withColumn("nnorm", norm(F.col("nv")))
+    )
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -1022,13 +1022,15 @@ def q_eval_mrr_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("qnorm", norm(F.col("qv")))
     )
-    corpus = spread(
-        e.filter(F.col("vec_id") >= N_QUERIES).select(
+    corpus = (
+        e.filter(F.col("vec_id") >= N_QUERIES)
+        .select(
             F.col("vec_id").alias("nid"),
             "label",
             F.col("embedding").alias("nv"),
         )
-    ).withColumn("nnorm", norm(F.col("nv")))
+        .withColumn("nnorm", norm(F.col("nv")))
+    )
     scored = (
         F.broadcast(q)
         .crossJoin(corpus)
@@ -1178,7 +1180,7 @@ def q_sim_range_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the q_sim_lsh_bucketed_topk bucket construction, widened to B*r)
     bucketed = (
         F.broadcast(anchors)
-        .crossJoin(spread(sliced))
+        .crossJoin(sliced)
         .withColumn(
             "bit",
             F.struct(

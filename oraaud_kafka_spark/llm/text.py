@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, materialize, spread
+from ..tables import load, materialize
 
 # BPE-ish pre-tokenizer: runs of alphanumerics OR single non-space symbols.
 # Kept to a regex subset (character classes, +) that Java regex and RE2
@@ -67,10 +67,6 @@ ORDER BY doc_id
 
 @query("q_text_quality_score", oracle=_QUALITY_ORACLE)
 def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread (round-15 honest A/B: 0.82 s with vs 0.52 s without —
-    # the repartition shuffles every document's full text, which costs
-    # more than the one-task feature map it parallelizes; the r14
-    # repetition_filter finding, re-measured here)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
@@ -92,9 +88,9 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # plain orderBy (round-15 honest A/B, full recompute per rep:
         # checkpoint_sort 0.44 s vs orderBy 0.41 s): the sampling pass
-        # re-runs only the segment above the spread exchange, which is
-        # cheaper than the checkpoint round-trip + per-invocation
-        # rebuild a data-computing build forces
+        # re-runs the map segment below the sort, which is cheaper than
+        # the checkpoint round-trip + per-invocation rebuild a
+        # data-computing build forces
         .orderBy("doc_id")
     )
 
@@ -141,9 +137,7 @@ ORDER BY lang, lang_guess
 
 @query("q_text_lang_id", oracle=_LANGID_ORACLE)
 def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread: five marker-array scans per token dominate, and the
-    # single-row-group fixture scans as ONE task
-    d = spread(load(spark, sf_dir, "documents"))
+    d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     # NB: the lambda must be single-parameter — PySpark reads a 2-arg
     # lambda as (element, index) — so capture the marker array via closure.
@@ -218,9 +212,6 @@ ORDER BY doc_id
 
 @query("q_text_repetition_filter", oracle=_REPETITION_ORACLE)
 def q_text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread (round-14 A/B): the extra full-text shuffle measured
-    # 0.58 -> 0.76 s — the tokenize+explode map is cheaper than moving
-    # the text
     d = load(spark, sf_dir, "documents")
     t = d.select("doc_id", "lang", F.split("text", " ").alias("toks"))
     exploded = t.select(
@@ -555,8 +546,6 @@ LIMIT {_BPE_TOP_K}
 @query("q_text_bpe_pair_counts", oracle=_BPE_ORACLE)
 def q_text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    # NOT spread (round-15 honest A/B: 0.75 s with vs 0.50 s without —
-    # shuffling the token arrays costs more than the pair map saves)
     tokenized = d.select(
         F.split("text", " ").alias("toks")
     ).filter(F.size("toks") >= 2)
@@ -757,9 +746,6 @@ def unigram_logprob_scores(d: DataFrame) -> DataFrame:
 
 @query("q_text_unigram_logprob", oracle=_UNIGRAM_ORACLE)
 def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread (round-15 honest A/B: 2.0 s with vs 1.5 s without —
-    # the full-text repartition feeds BOTH embeddings of the token
-    # stream, doubling its cost)
     d = load(spark, sf_dir, "documents")
     return unigram_logprob_scores(d).orderBy("doc_id")
 
@@ -793,8 +779,6 @@ ORDER BY lang, tier
 
 @query("q_text_ccnet_tiers", oracle=_CCNET_ORACLE)
 def q_text_ccnet_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread (round-15 honest A/B: 2.1 s with vs 1.6 s without —
-    # see q_text_unigram_logprob)
     d = load(spark, sf_dir, "documents")
     scores = unigram_logprob_scores(d)
     w = Window.partitionBy("lang").orderBy(
@@ -862,7 +846,7 @@ ORDER BY doc_id
 
 @query("q_text_dup_ngram_chars", oracle=_DUP_NGRAM_ORACLE)
 def q_text_dup_ngram_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(load(spark, sf_dir, "documents"))
+    d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     # guard: for docs with < _DUP_W tokens, F.sequence(0, size - W)
     # would DESCEND to [0, -1] and slice() would throw — emit an empty
@@ -995,7 +979,7 @@ def q_text_bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     top1 = (
-        spread(t.filter(F.size("toks") >= 2))
+        t.filter(F.size("toks") >= 2)
         .select(F.explode(pair_struct).alias("p"))
         .filter(F.col("p.a") != F.col("p.b"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -1024,8 +1008,7 @@ def q_text_bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda x: x.isNotNull(),
     )
     return (
-        spread(t)
-        .crossJoin(F.broadcast(top1))
+        t.crossJoin(F.broadcast(top1))
         .select("doc_id", "toks", rewrite.alias("merged"))
         .select(
             "doc_id",
@@ -1105,7 +1088,7 @@ ORDER BY doc_id
 
 @query("q_text_bigram_logprob", oracle=_BIGRAM_ORACLE)
 def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(load(spark, sf_dir, "documents"))
+    d = load(spark, sf_dir, "documents")
     t = d.select("doc_id", "lang", F.split("text", " ").alias("toks"))
     tok = t.select(F.explode("toks").alias("tok"))
     # NOT materialized (round-15 honest A/B, full recompute per rep:
@@ -1514,9 +1497,7 @@ ORDER BY doc_id
 @query("q_text_readability", oracle=_READ_ORACLE)
 def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease per document with a banded difficulty label."""
-    # spread: three regexp extractions per row dominate, and the
-    # single-row-group fixture scans as ONE task
-    d = spread(load(spark, sf_dir, "documents"))
+    d = load(spark, sf_dir, "documents")
     n_words = F.size(F.split("text", " ")).cast("bigint")
     n_sent = F.greatest(
         F.lit(1), F.size(F.regexp_extract_all("text", F.lit("[.!?]+"), 0))
@@ -1598,7 +1579,7 @@ ORDER BY g.doc_id
 def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fraction of each document's distinct 3-grams unique to it."""
     d = load(spark, sf_dir, "documents")
-    tokenized = spread(
+    tokenized = (
         d.select("doc_id", F.split("text", " ").alias("toks")).filter(
             F.size("toks") >= 3
         )
@@ -1827,7 +1808,7 @@ LIMIT {_PMI_TOP}
 @query("q_text_pmi_collocations", oracle=_PMI_ORACLE)
 def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top adjacent-pair collocations by PMI with a count floor."""
-    d = spread(load(spark, sf_dir, "documents"))
+    d = load(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
         F.size("t") >= 2
     )
@@ -1931,9 +1912,7 @@ def q_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-evaluate it PER ELEMENT (no common-subexpression elimination
     inside lambda bodies — observed as an O(n·d²) blow-up), while a
     bound column materializes once per row and F.get is then O(1)."""
-    # spread: the single-row-group fixture scans as ONE task and the
-    # per-row O(n log n) char sort is the dominant cost (guide §2.5)
-    d = spread(load(spark, sf_dir, "documents").filter(F.length("text") > 0))
+    d = load(spark, sf_dir, "documents").filter(F.length("text") > 0)
     n_int = F.col("__n")
     n = n_int.cast("double")
     staged = (
@@ -1974,9 +1953,9 @@ def q_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # plain orderBy (round-15 honest A/B, full recompute per rep:
     # materialize-before-sort 0.55 s vs orderBy 0.41 s): the sampling
-    # pass re-runs only the segment above the spread exchange, which is
-    # cheaper than the checkpoint round-trip + the per-invocation
-    # rebuild a data-computing build forces.
+    # pass re-runs the map segment below the sort, which is cheaper
+    # than the checkpoint round-trip + the per-invocation rebuild a
+    # data-computing build forces.
     return (
         staged.select(
             "doc_id",
@@ -2069,9 +2048,7 @@ ORDER BY query_term, rank
 @query("q_text_bm25_topk", oracle=BM25_ORACLE)
 def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    toks = spread(
-        d.select("doc_id", F.split("text", " ").alias("ts"))
-    ).select(
+    toks = d.select("doc_id", F.split("text", " ").alias("ts")).select(
         "doc_id", F.explode(F.filter("ts", lambda x: x != "")).alias("tok")
     )
     dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import bounded_sort, load, materialize, register_views, spread
+from ..tables import bounded_sort, load, materialize, register_views
 from . import (
     DEC,
     DEC_MONEY,
@@ -39,9 +39,6 @@ FROM lineitem
 
 @query("q_agg_global", oracle=_GLOBAL_ORACLE)
 def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread (round-14 A/B, 1.03 -> 1.16 s): the near-unique
-    # orderkey domain makes the distinct partial agg barely reduce, so
-    # the extra exchange outweighs the 1-task map.
     # TWO-LEVEL distinct (round-15, guide §2.3 / verdict item 5):
     # mixing count_distinct with the plain aggregates in ONE agg plans
     # a two-phase aggregate KEYED ON the near-unique l_orderkey — every
@@ -148,12 +145,8 @@ ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 
 @query("q_agg_cube", oracle=_CUBE_ORACLE)
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread + project: the cube Expand quadruples the rows into a
-    # partial agg that otherwise runs as ONE task (guide §2.5)
-    li = spread(
-        load(spark, sf_dir, "lineitem").select(
-            "l_returnflag", "l_linestatus", "l_quantity"
-        )
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_linestatus", "l_quantity"
     )
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -412,13 +405,8 @@ ORDER BY l_returnflag
 
 @query("q_agg_corr_covar", oracle=_CORR_ORACLE)
 def q_agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread + project-first: the 5-decimal-sum partial agg otherwise
-    # runs as one task on the single-row-group fixture (see
-    # q_agg_ols_regression); order-independent sums, result unchanged
-    li = spread(
-        load(spark, sf_dir, "lineitem").select(
-            "l_returnflag", "l_quantity", "l_discount"
-        )
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_quantity", "l_discount"
     )
     x = F.col("l_quantity")
     y = F.col("l_discount")
@@ -631,15 +619,11 @@ ORDER BY l_returnflag
 
 @query("q_agg_approx_percentile", oracle=_APPROX_PCT_ORACLE)
 def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO spread (round-15 A/B at sf0.1: the spread repartition alone
-    # costs ~0.5 s shuffling 600k rows while BOTH aggregate legs have
-    # partial/buffered map sides that don't need the parallelism —
-    # full query 1.71 s with spread vs 1.11 s without).
     # Exact leg stays F.median (round-15 negative A/B on the verdict's
     # frequency-collapsed two-order-statistic form: extendedprice cents
     # are near-unique, so the collapse doesn't reduce and the window
     # over distinct values measures 1.49 s vs 1.11 s — same finding as
-    # the r14 gini spread A/B; the collapsed form WAS proven
+    # the r14 gini A/B; the collapsed form WAS proven
     # bit-identical to F.median at all three SFs before being rejected
     # on speed).
     li = load(spark, sf_dir, "lineitem").select(
@@ -741,14 +725,8 @@ ORDER BY l_returnflag
 
 @query("q_agg_kll_quantile_rollup", oracle=_KLL_ORACLE)
 def q_agg_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread + project (round-15 re-A/B: 1.06 s with vs 1.21 s without
-    # — the KLL sketch-building map work is heavy enough that widening
-    # the single-row-group scan pays, unlike q_agg_approx_percentile
-    # where the same spread lost)
-    li = spread(
-        load(spark, sf_dir, "lineitem").select(
-            "l_returnflag", "l_linestatus", "l_extendedprice"
-        )
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_linestatus", "l_extendedprice"
     ).withColumn(
         "cents", F.round(F.col("l_extendedprice") * 100).cast("bigint")
     )
@@ -1074,9 +1052,6 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    # NOT spread (round-14 A/B): order values are near-unique, so the
-    # cent-collapse barely shrinks the data and spreading just shuffles
-    # the rows twice (0.97 -> 1.4 s)
     vals = (
         load(spark, sf_dir, "orders")
         .groupBy("o_orderpriority", cents.alias("cents"))
@@ -1437,11 +1412,7 @@ def q_agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    # the 4 md5 digests + 32-way explode per row ARE this query's cost,
-    # and the single-row-group local fixture serves that map stage as ONE
-    # task — widen the projected scan first (spread is a no-op on a real
-    # multi-split table); only the two needed columns cross the exchange
-    ob = spread(o.select("o_orderkey", "o_totalprice"))
+    ob = o.select("o_orderkey", "o_totalprice")
 
     # one digest seeds eight resamples, in TWO Generate stages so the
     # digests genuinely materialize once: subexpression elimination
@@ -2145,16 +2116,10 @@ ORDER BY l_linestatus
 
 @query("q_agg_ols_regression", oracle=_OLS_ORACLE)
 def q_agg_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The single-row-group fixture scans as ONE task, serializing the
-    # 5-decimal-sum partial aggregation on one core (guide §2.5 input
-    # skew); spread() recovers the parallelism and is a no-op on any
-    # multi-split table. Projection first keeps the exchange to the 3
-    # needed columns (guide §2.3). Decimal sums are order-independent,
-    # so the repartition cannot change a digit.
-    li = spread(
-        load(spark, sf_dir, "lineitem").select(
-            "l_linestatus", "l_quantity", "l_extendedprice"
-        )
+    # Projection first keeps the partial aggregation's exchange to the
+    # 3 needed columns (guide §2.3).
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_linestatus", "l_quantity", "l_extendedprice"
     )
     x = F.col("l_quantity")
     y = F.col("l_extendedprice") / F.lit(100).cast("double")

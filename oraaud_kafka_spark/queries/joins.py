@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..registry import query
-from ..tables import bounded_sort, load, materialize, spread
+from ..tables import bounded_sort, load, materialize
 from . import DEC, DEC_MONEY, DEC_RATE, md5_mod, sql_dsum, sql_md5_mod, sql_to_dbl, to_dbl
 
 _INNER_ORACLE = f"""
@@ -866,10 +866,8 @@ def q_join_bloom_prune_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     flags = (
         # 2 configs x _BLOOM_K md5 probes per lineitem row is the map
-        # cost of this eval, and the local single-row-group scan serves
-        # it as ONE task — widen the one probe column first (spread is a
-        # no-op on a real multi-split table)
-        spread(li.select("l_partkey"))
+        # cost of this eval
+        li.select("l_partkey")
         .select(
             "l_partkey",
             *[

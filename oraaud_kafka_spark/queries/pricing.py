@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import bounded_sort, load, materialize, spread
+from ..tables import bounded_sort, load, materialize
 from . import DEC, DEC_MONEY, DEC_RATE, sql_davg, sql_dsum, sql_to_dbl, to_dbl
 
 CUTOFF = "1998-09-02 00:00:00"
@@ -39,11 +39,8 @@ ORDER BY l_returnflag, l_linestatus
 
 @query("q1_pricing_summary", oracle=_ORACLE)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Narrow projection + filter FIRST (both reach the parquet scan),
-    # then spread: the fixtures are single-row-group files, so without a
-    # repartition the whole decimal-heavy partial aggregation runs on one
-    # core. spread() no-ops when the scan is already wide (real cluster).
-    li = spread(
+    # Narrow projection + filter FIRST: both reach the parquet scan.
+    li = (
         load(spark, sf_dir, "lineitem")
         .select(
             "l_returnflag",

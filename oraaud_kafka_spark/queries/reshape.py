@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, spread
+from ..tables import load
 
 _UNPIVOT_ORACLE = """
 WITH u AS (

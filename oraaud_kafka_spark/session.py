@@ -116,10 +116,8 @@ def get_spark(
     (module docstring).
     ``extra_conf`` is applied last, so it overrides any default here."""
     cpus = default_parallelism()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    )
+    master = master or f"local[{cpus}]"
+    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

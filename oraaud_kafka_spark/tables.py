@@ -23,9 +23,9 @@ TABLES = (
 # Plan cache: spark.read.parquet costs ~100 ms of driver time per call
 # (file listing + footer schema read). DataFrames are immutable logical
 # plans, so reusing one per (session, dir, table) is safe and drops that
-# cost from every query build — which the per-round harness pays 93+
-# times. Keyed by the session object itself (identity hash) so a
-# stopped/restarted session never serves stale plans.
+# cost from every query build. Keyed by the session object itself
+# (identity hash) so a stopped/restarted session never serves stale
+# plans.
 _LOAD_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -66,26 +66,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(path)
-
-
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Widen a scan before an expression-dense map stage (md5-per-shingle,
-    per-pair cosine folds) IF it is narrower than the session parallelism.
-
-    The local fixtures are single-row-group parquet files, so a scan yields
-    exactly one partition and heavy per-row compute serializes on one core.
-    On a real cluster a large scan already has hundreds/thousands of splits
-    and this returns the input unchanged — the repartition only exists to
-    recover parallelism that the file layout withheld, never as an extra
-    shuffle at scale. Only use it where per-row expression cost dominates
-    the shuffle cost of the (small) early rows.
-    """
-    from .session import default_parallelism
-
-    target = partitions or default_parallelism()
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
 
 
 def bounded_sort(df: DataFrame, *cols: str) -> DataFrame:

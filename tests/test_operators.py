@@ -104,16 +104,6 @@ def test_plan_report_counts(spark):
     assert "l_partkey" in r.scan_reads_only
 
 
-def test_spread_is_noop_on_wide_input(spark):
-    from oraaud_kafka_spark.tables import spread
-
-    df = spark.range(1000).repartition(64)
-    out = spread(df, partitions=32)
-    assert out is df  # already wider than target: no extra exchange
-    narrow = spark.range(1000).coalesce(1)
-    assert spread(narrow, partitions=8).rdd.getNumPartitions() == 8
-
-
 def test_registry_plan_cache_per_session_and_dir(spark, registry_builds):
     """Registered callables memoize the built plan per (session,
     sf_dir): a repeat call with the same key returns a new DataFrame
